@@ -186,17 +186,26 @@ object Bench {
     // round-over-round comparison never again depends on a stdout
     // capture window. Path overridable for dev runs; stdout contract
     // unchanged. Best-effort: an unwritable path must not fail a bench.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: java.io.IOException =>
-      System.err.println(s"[bench] could not write $outPath: $e")
-    }
+    writeArtifact(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"), line)
     spark.stop()
     // Belt over the shutdown hook's suspenders: leave the box clean even
     // if the hook is skipped (e.g. a SIGKILL would skip both — the next
     // run's sweep covers that case via the dead-pid check).
     Scratch.deleteRecursively(new java.io.File(Scratch.root))
   }
+
+  /** Best-effort artifact write: `line` plus a newline to `outPath`.
+    * Any non-fatal failure — an unwritable directory, or a malformed
+    * path that `Paths.get` refuses with InvalidPathException — is
+    * reported on stderr and answered with false, so a finished bench
+    * never dies on its artifact. */
+  private[graft] def writeArtifact(outPath: String, line: String): Boolean =
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      true
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] could not write $outPath: $e")
+      false
+    }
 }

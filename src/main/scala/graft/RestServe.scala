@@ -104,6 +104,17 @@ object RestServe {
   private def msg(status: Int, text: String): Res =
     Res(status, s"""{"message":"${esc(text)}"}""")
 
+  // ---- server errors ------------------------------------------------
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.RestServe")
+  private val requestIds = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** `e` and its causes, outermost first, as `Class: message` links
+    * joined by ` <- ` (capped, so a cyclic chain still ends). */
+  private[graft] def causeChain(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" <- ")
+
   /** JSON body → flat column→value map (the reference's collections are
     * schemaless; nested payloads ride as their JSON text). Non-object
     * or unparseable bodies → None (the route's 400). */
@@ -752,18 +763,17 @@ object RestServe {
               return msg(403, "Not authorized to approve this submission")
             if (subStatus(sub) == "approved")
               return msg(400, "Submission already approved")
-            // Capacity count over the MERGED view (index.js:816-822):
-            // a journal-only count would reset after compact() folds
-            // approved rows into the base (the review's finding) — this
-            // is one key-pruned filtered count per approve, the same
-            // point-read class as the ownership guard. Before any
-            // status write exists the column itself doesn't, and the
-            // count is definitionally 0.
-            val cur = store.submissions.current()
-            val approved =
-              if (!cur.columns.contains("status")) 0L
-              else cur.filter(col("l_orderkey") === taskKey
-                && col("status") === "approved").count()
+            // Capacity count over the MERGED state (index.js:816-822),
+            // journal first: approved rows in the journal count on the
+            // driver, and the base is scanned — without the keys the
+            // journal supersedes, the same key set current() merges by —
+            // only once a compaction has folded a `status` column into
+            // it (a journal-only count would reset after compact(), the
+            // review's finding). A fixture base has no `status` column
+            // and holds no approved row, so until then an approve starts
+            // no Spark job.
+            val approved = store.submissions.countWhere(
+              Map("l_orderkey" -> taskKey, "status" -> "approved"))
             if (approved >= capacityOf(task.get))
               return msg(400, "Required number of workers already fulfilled")
             store.submissions.patch(key,
@@ -1162,9 +1172,12 @@ object RestServe {
       } finally ex.close()
 
     server.createContext("/", (ex: HttpExchange) => {
+      val requestId = requestIds.incrementAndGet()
+      val method = ex.getRequestMethod
+      // The matched route's pattern, named by the server-error log line.
+      var routePattern = "(unrouted)"
       try {
         val uri = ex.getRequestURI
-        val method = ex.getRequestMethod
         val rawPath = Option(uri.getPath).getOrElse("")
         if (rawPath == "/") {
           if (method == "GET")
@@ -1181,6 +1194,7 @@ object RestServe {
           else pickRoute(pathMatches.filter(_._1.method == method)) match {
             case None => respond(ex, msg(405, "method not allowed"))
             case Some((route, binds)) =>
+              routePattern = route.pattern
               authorize(route.auth,
                 Option(ex.getRequestHeaders.getFirst("Authorization"))) match {
                 case Left(res) => respond(ex, res)
@@ -1283,6 +1297,10 @@ object RestServe {
         }
       } catch {
         case e: Throwable =>
+          // The reply names only the exception class; the log carries
+          // the route, the request id and the whole cause chain (with
+          // its stack), so a server fault is never silent.
+          log.error(s"500 on $method $routePattern (request $requestId): ${causeChain(e)}", e)
           try respond(ex, msg(500, e.getClass.getSimpleName))
           catch { case _: Throwable => () }
       }

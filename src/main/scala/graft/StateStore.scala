@@ -6,6 +6,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.functions.KeySetFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,12 +28,18 @@ import org.apache.spark.sql.types._
   *     parquet lake in place would be absurd; appending to a journal
   *     (in production: a Kafka topic / Delta commit log) is exactly
   *     what Hudi/Delta/Iceberg streaming upserts do.
-  *   - READ = base ⟕anti journal-keys ∪ journal-rows: the journal is
-  *     request-bounded (tiny), so the anti join BROADCASTS it against
-  *     the base scan — one pruned parquet pass, no shuffle, no window
-  *     over the corpus. When the journal is empty, `current()` returns
-  *     the base RELATION ITSELF, so an unwritten entity plans and
-  *     serves byte-identically to the read-only façade.
+  *   - READ = base rows whose key the journal has not written ∪
+  *     journal rows. The journal is request-bounded (auto-compaction
+  *     caps it), so its key set rides INTO the plan as one null-safe
+  *     `NOT key IN (journal keys)` filter that plans as a Catalyst
+  *     InSet — one pruned parquet pass, no broadcast job, no shuffle,
+  *     no window over the corpus. When the journal is empty,
+  *     `current()` returns the base RELATION ITSELF, so an unwritten
+  *     entity plans and serves byte-identically to the read-only façade.
+  *   - GUARD COUNTS ([[EntityState.countWhere]]) use the same key set:
+  *     journal rows count on the driver, and the base is scanned only
+  *     when its schema carries every predicate column — so a guard
+  *     whose rows all live in the journal starts no Spark job.
   *   - SCHEMA EVOLUTION: journal rows may carry columns the base lacks
   *     (the reference's collections are schemaless; its inserts attach
   *     whatever the handler builds, index.js:494-506). `current()`
@@ -339,8 +346,8 @@ final class StateStore(spark: SparkSession, dir: String,
   /** The shared mutation frame: buffer the body's journal ops, frame
     * them as ONE fsynced WAL record (rolling back on append failure),
     * then — still under the caller's locks — fold any oversized
-    * journals (the LSM discipline that keeps `current()`'s broadcast
-    * side bounded BY CONSTRUCTION however long the server runs;
+    * journals (the LSM discipline that keeps `current()`'s journal key
+    * set bounded BY CONSTRUCTION however long the server runs;
     * compaction debt amortized O(1) per write, exactly how RocksDB/
     * Delta pay for merge-on-read) and republish ONLY the entities this
     * body actually wrote (the r10 verdict: republishing all six views
@@ -722,8 +729,32 @@ final class EntityState(
       case _ => ()
     }
 
-  private def keyFields: Seq[StructField] =
-    keyCols.map(c => base.schema(base.schema.fieldIndex(c)))
+  /** `df` without the rows whose key the journal has written — the
+    * merge's ONE key-exclusion path ([[current]], [[lookupBy]],
+    * [[countWhere]]): a `NOT key IN (journal keys)` filter that plans
+    * as a Catalyst InSet, a hash probe per row, so no key DataFrame is
+    * built and no broadcast job runs ([[graft.functions.KeySetFunctions]]
+    * builds the InSet directly, keeping planning flat in journal size).
+    * Null-safe exactly like the left-anti join it replaced: a base key
+    * with a null column equals no journal key, so the row survives (a
+    * bare NOT IN would evaluate to null and drop it), and a journal key
+    * with a null column can match nothing, so it stays out of the set.
+    * Composite keys probe the struct set only behind an InSet on the
+    * first key column: a struct InSet is a TreeSet under interpreted
+    * ordering, so only the rows whose first column the journal holds
+    * pay that probe. */
+  private def withoutSuperseded(df: DataFrame, keys: Iterable[Seq[Any]]): DataFrame = {
+    val live = keys.filterNot(_.contains(null)).toSeq
+    if (live.isEmpty) df
+    else {
+      val fields = keyCols.map(c => df.schema(c))
+      val superseded =
+        if (fields.sizeIs == 1) KeySetFunctions.keyIn(spark, fields, live)
+        else KeySetFunctions.keyIn(spark, fields.take(1), live.map(_.take(1)).distinct) &&
+          KeySetFunctions.keyIn(spark, fields, live)
+      df.filter(keyCols.map(col(_).isNull).reduce(_ || _) || !superseded)
+    }
+  }
 
   def journalSize: Int = synchronized(journal.size)
 
@@ -884,9 +915,10 @@ final class EntityState(
     * rows whose key the journal has NOT superseded (a journal version
     * that no longer matches, or a tombstone, hides its base row).
     *
-    * The supersede check runs DISTRIBUTED — base matches anti-join the
-    * journaled keys (broadcast; bounded by auto-compaction) — so the
-    * driver collect is `limit(1)` regardless of the secondary column's
+    * The supersede check runs DISTRIBUTED — base matches drop the
+    * journaled keys in the scan itself (the shared key-set filter;
+    * bounded by auto-compaction) — so the driver collect is `limit(1)`
+    * regardless of the secondary column's
     * selectivity (the r9 verdict's unbounded-collect observation: the
     * old form collected EVERY base match before filtering). When the
     * secondary key is non-unique, the smallest primary key wins — a
@@ -905,40 +937,59 @@ final class EntityState(
         // every registration) never pay a Spark job for "no".
         else if (!mightBeInBase(column, value)) None
         else {
-          val matches = base.filter(col(column) === lit(value))
-          val live =
-            if (snap.isEmpty) matches
-            else {
-              val keysDf = spark.createDataFrame(
-                snap.map(_._1).map(Row.fromSeq).asJava, StructType(keyFields))
-              matches.join(broadcast(keysDf), keyCols, "left_anti")
-            }
-          live.orderBy(keyCols.map(col): _*).limit(1).collect().headOption
+          withoutSuperseded(base.filter(col(column) === lit(value)), snap.map(_._1))
+            .orderBy(keyCols.map(col): _*).limit(1).collect().headOption
             .map(r => r.schema.fieldNames.zip(r.toSeq).toMap)
         }
     }
   }
 
+  /** One consistent view of the journal's live rows, its keys
+    * (tombstones included), the schema and the base relation. */
+  private def snapshot(): (Vector[Map[String, Any]], Vector[Seq[Any]], Seq[StructField], DataFrame) =
+    synchronized((journal.values.flatten.toVector, journal.keys.toVector, allFields, base))
+
   /** The merged relation. Empty journal → the base relation ITSELF
     * (identical object, identical plan — the read-only façade's
     * byte-equality contract is preserved by construction). Otherwise:
-    * base anti-join journal keys (journal side broadcast — bounded by
-    * request count) union journal rows, schema evolution null-filled. */
+    * base without the journal keys (the shared key-set filter — bounded
+    * by auto-compaction) union journal rows, schema evolution
+    * null-filled. */
   def current(): DataFrame = {
-    val (snapRows, snapKeys, snapFields, snapBase) = synchronized {
-      (journal.values.flatten.toVector, journal.keys.toVector, allFields, base)
-    }
+    val (snapRows, snapKeys, snapFields, snapBase) = snapshot()
     if (snapKeys.isEmpty) snapBase
     else {
       val schema = StructType(snapFields)
       val delta = spark.createDataFrame(
         snapRows.map(m => Row.fromSeq(schema.map(f => m.getOrElse(f.name, null)))).asJava,
         schema)
-      val keysDf = spark.createDataFrame(
-        snapKeys.map(Row.fromSeq).asJava, StructType(keyFields))
-      snapBase.join(broadcast(keysDf), keyCols, "left_anti")
+      withoutSuperseded(snapBase, snapKeys)
         .unionByName(delta, allowMissingColumns = true)
     }
+  }
+
+  /** Merged count of the rows equal to `where` on every named column —
+    * the write guards' count (the approve capacity rule), with the
+    * answer `current().filter(...).count()` gives, but JOURNAL FIRST:
+    * journal rows count on the driver, and the base is scanned only
+    * when its schema carries every predicate column (a base without
+    * one holds only nulls there, and null equals nothing), then without
+    * the journal-superseded keys. A guard whose matching rows all live
+    * in the journal — every approve before the first compaction folds
+    * a `status` column into the base — therefore starts no Spark job.
+    * Values coerce to their column's type first, as writes do. */
+  def countWhere(where: Map[String, Any]): Long = {
+    val (snapRows, snapKeys, snapFields, snapBase) = snapshot()
+    val types = snapFields.map(f => f.name -> f.dataType).toMap
+    val want = where.map { case (c, v) => c -> types.get(c).fold(v)(coerce(v, _)) }
+    val inJournal = snapRows.count(r =>
+      want.forall { case (c, v) => v != null && r.get(c).contains(v) })
+    val inBase =
+      if (!want.keys.forall(snapBase.columns.contains)) 0L
+      else want.foldLeft(withoutSuperseded(snapBase, snapKeys)) {
+        case (df, (c, v)) => df.filter(col(c) === lit(v))
+      }.count()
+    inJournal + inBase
   }
 
   /** w9-style maintenance: materialize the merged view as the new base

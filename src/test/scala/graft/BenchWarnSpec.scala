@@ -20,6 +20,18 @@ class BenchWarnSpec extends AnyFunSuite {
     assert(l.count.get() == 2)
   }
 
+  test("writeArtifact is best-effort: a malformed or unwritable path answers false instead of throwing") {
+    val dir = Scratch.tempDir("bench_artifact")
+    val ok = s"$dir/bench_out.json"
+    assert(Bench.writeArtifact(ok, """{"metric":"total"}"""))
+    assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(ok)),
+      java.nio.charset.StandardCharsets.UTF_8) == "{\"metric\":\"total\"}\n")
+    // A NUL byte makes Paths.get throw InvalidPathException, which is no
+    // IOException; a missing parent directory is the IOException case.
+    assert(!Bench.writeArtifact(s"$dir/bad\u0000name.json", "{}"))
+    assert(!Bench.writeArtifact(s"$dir/no/such/dir/bench_out.json", "{}"))
+  }
+
   test("BenchErrorLogCounter counts ERROR log events and ignores WARN (r10 verdict #7)") {
     val c = new BenchErrorLogCounter
     c.attach()

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -134,17 +135,67 @@ class RestStateTieSpec extends AnyFunSuite with RestHttp
       .collect().map(_.toSeq).toSet
     assert(approved == batch, s"approved=$approved batch=$batch")
 
+    // A base row whose composite key has a NULL column (l_suppkey): it
+    // counts toward task 3's capacity once compaction folds it into the
+    // base, and it must survive every later merge, as the anti join the
+    // key-set filter replaced kept unmatched null keys.
+    store.submissions.upsert(Map("l_orderkey" -> 3L, "l_linenumber" -> 90,
+      "l_partkey" -> 0L, "l_suppkey" -> null, "status" -> "approved"))
+
     // The capacity guard survives COMPACTION (review fix): folding the
     // approved rows into the base and clearing the journal must not
-    // reset the count — the guard reads the merged view, not the
-    // journal.
+    // reset the count — the guard reads the merged state, not the
+    // journal alone.
     store.submissions.compact()
     assert(store.submissions.journalSize == 0)
+    val compacted = store.submissions.current() // empty journal: the base itself
     val postCompact = patch(s"/buyer/submissions/${subs(3)}/approve",
       s"""{"email":"$owner"}""")
     assert(postCompact._1 == 400
       && postCompact._2.contains("Required number of workers already fulfilled"),
       s"compaction reset the capacity guard: $postCompact")
+
+    // Base-approved rows superseded by the journal stop counting: one
+    // flipped to rejected, one tombstoned. That frees one slot (4 base
+    // approvals − 2 = 2 < 3), so subs(3)'s approve lands in the journal
+    // and the approved rows split between base (subs(2) + the null-key
+    // row) and journal (subs(3)); subs(4) then hits the full guard.
+    def keyOf(id: String): Seq[Any] = id.split("-") match {
+      case Array(o, l, p, s) => Seq[Any](o.toLong, l.toInt, p.toLong, s.toLong)
+    }
+    assert(patch(s"/buyer/submissions/${subs(0)}/reject", s"""{"email":"$owner"}""")._1 == 200)
+    assert(store.submissions.delete(keyOf(subs(1))))
+    assert(patch(s"/buyer/submissions/${subs(3)}/approve", s"""{"email":"$owner"}""")._1 == 200)
+    val full = patch(s"/buyer/submissions/${subs(4)}/approve", s"""{"email":"$owner"}""")
+    assert(full._1 == 400 && full._2.contains("Required number of workers already fulfilled"),
+      s"the null-key base row was dropped from the merge: $full")
+
+    // The same answers as the left-anti-join merge, restated here from
+    // the compacted base and the journaled keys.
+    val journaled = Seq(subs(0), subs(1), subs(3)).map(keyOf)
+    assert(store.submissions.journalSize == journaled.size)
+    val keyCols = store.submissions.keyCols
+    val merged = store.submissions.current()
+    val schema = merged.schema // the base's columns plus evolved ones (rejectedAt)
+    val keysDf = spark.createDataFrame(
+      journaled.map(org.apache.spark.sql.Row.fromSeq).asJava,
+      org.apache.spark.sql.types.StructType(keyCols.map(c => schema(c))))
+    val journalRows = journaled.flatMap(store.submissions.lookup)
+    assert(journalRows.size == 2, "one journaled key is a tombstone")
+    val journalDf = spark.createDataFrame(
+      journalRows.map(m => org.apache.spark.sql.Row.fromSeq(
+        schema.map(f => m.getOrElse(f.name, null)))).asJava, schema)
+    // A USING join lists the key columns first: compare by column name.
+    val antiJoin = compacted.join(broadcast(keysDf), keyCols, "left_anti")
+      .unionByName(journalDf, allowMissingColumns = true)
+      .select(merged.columns.map(col): _*)
+    assert(merged.exceptAll(antiJoin).isEmpty && antiJoin.exceptAll(merged).isEmpty,
+      "the key-set merge diverged from the anti-join merge")
+    assert(merged.filter($"l_suppkey".isNull).count() == 1, "the null-key row must survive")
+    val approvedNow = antiJoin.filter($"l_orderkey" === 3L && $"status" === "approved").count()
+    assert(approvedNow == 3)
+    assert(store.submissions.countWhere(Map("l_orderkey" -> 3L, "status" -> "approved"))
+      == approvedNow)
   }
 
   test("w4 tie: HTTP deletes equal the negated-key filter rewrite") {

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end proof of the façade's WRITE surface: every reference
@@ -69,6 +70,56 @@ class RestWriteSpec extends AnyFunSuite with RestHttp
     assert(post("/users", "{not json")._1 == 400)
     assert(post("/users", "[1,2,3]")._1 == 400) // non-object
     assert(post("/tasks", "null")._1 == 400)
+  }
+
+  // ---- server errors --------------------------------------------------
+
+  test("a handler fault answers the 500 shape and logs method, route, request id and the cause chain") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val walPath = Scratch.tempDir("rest_500") + "/ops.wal"
+    val (faulty, store) = RestServe.startWithStore(TestSpark.spark, dir, 0, walPath = Some(walPath))
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val appender = new AbstractAppender("graft-rest-500", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable): Unit
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration.getRootLogger
+    cfg.addAppender(appender, Level.ERROR, null)
+    ctx.updateLoggers()
+    try {
+      // The WAL append fails with a nested cause — an IOException is no
+      // client error, so it reaches the catch-all.
+      store.wal.get.out = new java.io.FileOutputStream(new java.io.File(walPath), true) {
+        override def write(b: Array[Byte]): Unit =
+          throw new java.io.IOException("injected append failure",
+            new IllegalStateException("disk detached"))
+      }
+      val http = new RestHttp { val base = s"http://127.0.0.1:${faulty.getAddress.getPort}" }
+      val (code, body) = http.post("/users", """{"name":"F","email":"fault@x.io","role":"worker"}""")
+      assert(code == 500 && body == """{"message":"IOException"}""", s"$code $body")
+      val logged = events.asScala.filter(_.getLoggerName == "graft.RestServe").toSeq
+      assert(logged.size == 1, logged.map(_.getMessage.getFormattedMessage))
+      val line = logged.head.getMessage.getFormattedMessage
+      assert(raw"500 on POST /users \(request \d+\): ".r.findFirstIn(line).isDefined, line)
+      assert(line.contains("java.io.IOException: injected append failure <- " +
+        "java.lang.IllegalStateException: disk detached"), line)
+      assert(logged.head.getLevel == Level.ERROR
+        && logged.head.getThrown.isInstanceOf[java.io.IOException])
+    } finally {
+      cfg.removeAppender("graft-rest-500")
+      ctx.updateLoggers()
+      appender.stop()
+      faulty.stop(0)
+      store.wal.foreach(_.close())
+      faulty.getExecutor match {
+        case es: java.util.concurrent.ExecutorService => es.shutdown()
+        case _ => ()
+      }
+    }
   }
 
   // ---- create-payment-intent (index.js:260-276) ------------------------

@@ -82,6 +82,79 @@ class StateStoreSpec extends AnyFunSuite {
     assert(store.users.lookupBy("c_name", "nobody-3@graft.io").isEmpty)
   }
 
+  test("single-column key merge is null-safe: a base row with a null key survives a non-empty journal and counts") {
+    import spark.implicits._
+    val e = new EntityState(spark,
+      () => Seq[(Option[Long], String)]((Some(1L), "a"), (None, "b"), (Some(2L), "b")).toDF("id", "v"),
+      Seq("id"))
+    e.upsert(Map("id" -> 2L, "v" -> "c"))
+    assert(rowsOf(e) == Seq("[1,a]", "[2,c]", "[null,b]"),
+      "a bare NOT IN would have dropped the null-key row")
+    assert(e.countWhere(Map("v" -> "b")) == 1 && e.countWhere(Map("v" -> "c")) == 1)
+    assert(e.lookupBy("v", "b").exists(_("id") == null))
+  }
+
+  test("an armed approve session starts no Spark job once the store is warm: every write guard answers from the journal") {
+    val secret = "job-free-secret"
+    val (server, store) = RestServe.startWithStore(spark, dir, 0, authSecret = Some(secret))
+    try {
+      val http = new RestHttp { val base = s"http://127.0.0.1:${server.getAddress.getPort}" }
+      def as(email: String) = http.auth(GraftAuth.token(secret, email))
+      def field(reply: (Int, String), name: String): String =
+        s""""$name":"?([^",}]+)""".r.findFirstMatchIn(reply._2).get.group(1)
+      val (admin, buyer, w1, w2) =
+        ("admin@jobs.io", "buyer@jobs.io", "w1@jobs.io", "w2@jobs.io")
+      // The store's one-time warm-up: registering the admin builds the
+      // users e-mail Bloom and the users id watermark; the other
+      // single-key entities' watermarks follow, and the submissions
+      // base relation is loaded (its parquet schema read is a job, once
+      // per relation).
+      assert(http.post("/users", s"""{"name":"Admin","email":"$admin","role":"admin"}""")._1 == 201)
+      Seq(store.tasks, store.payments, store.withdrawals, store.notifications).foreach(_.newId())
+      store.submissions.current()
+      // The façade's request threads set no job group, so every job a
+      // request starts lands in the ungrouped set of the status store.
+      val sc = spark.sparkContext
+      def ungrouped(): Set[Int] = {
+        Thread.sleep(1500) // status store feeds from the async listener bus
+        sc.statusTracker.getJobIdsForGroup(null).toSet
+      }
+      val before = ungrouped()
+      Seq(buyer -> "buyer", w1 -> "worker", w2 -> "worker").foreach { case (e, role) =>
+        assert(http.post("/users", s"""{"name":"$role","email":"$e","role":"$role"}""")._1 == 201)
+      }
+      assert(as(buyer).post("/purchase-coin", """{"coins":400,"amount":20}""")._1 == 200)
+      val task = as(buyer).post("/tasks",
+        """{"task_title":"Label","task_detail":"Label 20 images","required_workers":1,""" +
+          """"payable_amount":220,"completion_date":"2026-12-31","submission_info":"a link"}""")
+      assert(task._1 == 201, task)
+      val subs = Seq(w1, w2).map { w =>
+        val r = as(w).post("/api/submissions",
+          s"""{"task_id":${field(task, "taskId")},"worker_email":"$w","worker_name":"W"}""")
+        assert(r._1 == 201, r)
+        field(r, "id")
+      }
+      assert(as(buyer).patch(s"/buyer/submissions/${subs(0)}/approve", "{}")._1 == 200)
+      val second = as(buyer).patch(s"/buyer/submissions/${subs(1)}/approve", "{}")
+      assert(second._1 == 400 && second._2.contains("Required number of workers already fulfilled"),
+        second)
+      val wd = as(w1).post("/withdrawals",
+        s"""{"worker_email":"$w1","worker_name":"W","withdrawal_coin":200,"withdrawal_amount":10,""" +
+          """"payment_system":"bkash","account_number":"0170000000"}""")
+      assert(wd._1 == 201, wd)
+      assert(as(admin).post(s"/admin/withdrawals/${field(wd, "id")}/approve", "{}")._1 == 200)
+      val started = ungrouped() -- before
+      assert(started.isEmpty,
+        s"the session's writes must start no Spark job, started ${started.size}")
+    } finally {
+      server.stop(0)
+      server.getExecutor match {
+        case es: java.util.concurrent.ExecutorService => es.shutdown()
+        case _ => ()
+      }
+    }
+  }
+
   // ---- WAL: replay equivalence --------------------------------------
 
   test("WAL replay rebuilds the journal exactly: every op kind, every value type, across entities") {
