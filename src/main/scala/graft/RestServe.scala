@@ -304,18 +304,20 @@ object RestServe {
     // Parameterized entity reads — the reference's :id / query-param
     // routes, each the parameterized form of a catalog read (ReadPath
     // P1/P2/S3, O1's per-user feed shape) over the entity's MERGED view
-    // (read-your-writes; with an empty journal current() IS the same
-    // cached relation, so plans and bytes match the read-only façade).
+    // (read-your-writes; with an empty journal current(where) IS the
+    // same cached relation filtered, so plans and bytes match the
+    // read-only façade). The filter goes INTO current(where), so the
+    // journal-key probe runs only on the rows it keeps.
     def taskById(params: Map[String, String]): Option[DataFrame] =
       params.get("id").flatMap(_.toLongOption).map { id =>
-        store.tasks.current().filter($"o_orderkey" === id) // P2, index.js:1017-1029
+        store.tasks.current($"o_orderkey" === id) // P2, index.js:1017-1029
       }
     def userProfile(params: Map[String, String]): Option[DataFrame] =
       params.get("name").map { n =>
-        store.users.current().filter($"c_name" === n) // P1, index.js:413-424
+        store.users.current($"c_name" === n) // P1, index.js:413-424
       }
     def notificationsFeed(u: Long, params: Map[String, String]): DataFrame =
-      store.notifications.current().filter($"user_id" === u) // P4+O1, index.js:226-238
+      store.notifications.current($"user_id" === u) // P4+O1, index.js:226-238
         .select($"event_id", $"ts", $"event_type")
         .orderBy($"ts".desc, $"event_id".desc).limit(cap(params))
     /** GET /api/notifications: the reference takes NO parameter — the
@@ -331,7 +333,7 @@ object RestServe {
           params.get("user").flatMap(_.toLongOption).map(notificationsFeed(_, params))
       }
     def paymentsFeed(u: Long, params: Map[String, String]): DataFrame =
-      store.payments.current().filter($"o_custkey" === u) // P4+O1, index.js:427-439
+      store.payments.current($"o_custkey" === u) // P4+O1, index.js:427-439
         .select($"o_orderkey", $"o_orderdate", $"o_totalprice")
         .orderBy($"o_orderkey".desc).limit(cap(params))
     /** GET /payments: the reference 403s "Unauthorized" unless the
@@ -357,9 +359,8 @@ object RestServe {
     def withdrawalsRead(params: Map[String, String]): Option[DataFrame] = {
       // S3 dynamic-predicate scan, index.js:1099-1109: the filter
       // exists only when the param does.
-      val base = store.withdrawals.current()
       val filtered = params.get("status")
-        .fold(base)(s => base.filter($"o_orderstatus" === s))
+        .fold(store.withdrawals.current())(s => store.withdrawals.current($"o_orderstatus" === s))
       Some(filtered.select($"o_orderkey", $"o_orderstatus")
         .orderBy($"o_orderkey").limit(cap(params)))
     }
@@ -369,7 +370,7 @@ object RestServe {
         .orderBy($"o_orderkey").limit(cap(params)))
     def submissionsRead(params: Map[String, String]): Option[DataFrame] =
       params.get("user").flatMap(_.toLongOption).map { u =>
-        store.submissions.current().filter($"l_suppkey" === u) // P4+O1, index.js:1001-1015
+        store.submissions.current($"l_suppkey" === u) // P4+O1, index.js:1001-1015
           .select($"l_orderkey", $"l_linenumber", $"l_quantity", $"l_returnflag")
           .orderBy($"l_orderkey".desc, $"l_linenumber".desc).limit(cap(params))
       }

@@ -6,8 +6,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.functions.KeySetFunctions
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.functions.{KeySet, KeySetProbe}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,9 +32,11 @@ import org.apache.spark.sql.types._
   *   - READ = base rows whose key the journal has not written ∪
   *     journal rows. The journal is request-bounded (auto-compaction
   *     caps it), so its key set rides INTO the plan as one null-safe
-  *     `NOT key IN (journal keys)` filter that plans as a Catalyst
-  *     InSet — one pruned parquet pass, no broadcast job, no shuffle,
-  *     no window over the corpus. When the journal is empty,
+  *     `NOT key IN (journal keys)` filter, a binary search per row
+  *     inside the scan's stage — one pruned parquet pass, no broadcast
+  *     job, no shuffle, no window over the corpus. A read's own filter
+  *     goes into `current(where)`, below the key-set filter, so only
+  *     the rows it keeps are probed. When the journal is empty,
   *     `current()` returns the base RELATION ITSELF, so an unwritten
   *     entity plans and serves byte-identically to the read-only façade.
   *   - GUARD COUNTS ([[EntityState.countWhere]]) use the same key set:
@@ -731,29 +734,18 @@ final class EntityState(
 
   /** `df` without the rows whose key the journal has written — the
     * merge's ONE key-exclusion path ([[current]], [[lookupBy]],
-    * [[countWhere]]): a `NOT key IN (journal keys)` filter that plans
-    * as a Catalyst InSet, a hash probe per row, so no key DataFrame is
-    * built and no broadcast job runs ([[graft.functions.KeySetFunctions]]
-    * builds the InSet directly, keeping planning flat in journal size).
-    * Null-safe exactly like the left-anti join it replaced: a base key
-    * with a null column equals no journal key, so the row survives (a
-    * bare NOT IN would evaluate to null and drop it), and a journal key
-    * with a null column can match nothing, so it stays out of the set.
-    * Composite keys probe the struct set only behind an InSet on the
-    * first key column: a struct InSet is a TreeSet under interpreted
-    * ordering, so only the rows whose first column the journal holds
-    * pay that probe. */
+    * [[countWhere]]): a `NOT key IN (journal keys)` filter evaluated
+    * in the scan's own stage ([[graft.functions.KeySetProbe]]), so no
+    * key DataFrame is built and no broadcast job runs. Null-safe
+    * exactly like the left-anti join it replaced: a base key with a
+    * null column equals no journal key, so the row survives (a bare
+    * NOT IN would evaluate to null and drop it), and a journal key with
+    * a null column can match nothing, so it stays out of the set. */
   private def withoutSuperseded(df: DataFrame, keys: Iterable[Seq[Any]]): DataFrame = {
     val live = keys.filterNot(_.contains(null)).toSeq
     if (live.isEmpty) df
-    else {
-      val fields = keyCols.map(c => df.schema(c))
-      val superseded =
-        if (fields.sizeIs == 1) KeySetFunctions.keyIn(spark, fields, live)
-        else KeySetFunctions.keyIn(spark, fields.take(1), live.map(_.take(1)).distinct) &&
-          KeySetFunctions.keyIn(spark, fields, live)
-      df.filter(keyCols.map(col(_).isNull).reduce(_ || _) || !superseded)
-    }
+    else df.filter(!GraftColumns.of(KeySetProbe(keyCols.map(UnresolvedAttribute.quoted),
+      new KeySet(live.map(_.map(_.asInstanceOf[Number].longValue))))))
   }
 
   def journalSize: Int = synchronized(journal.size)
@@ -955,16 +947,27 @@ final class EntityState(
     * base without the journal keys (the shared key-set filter — bounded
     * by auto-compaction) union journal rows, schema evolution
     * null-filled. */
-  def current(): DataFrame = {
+  def current(): DataFrame = merged(None)
+
+  /** The rows of `current().filter(where)`, with `where` applied to the
+    * base BEFORE the key-set filter. Catalyst folds stacked filters
+    * into one conjunction, the first-applied filter's terms first, and
+    * evaluates them in that order: after `current().filter(where)` the
+    * key-set probe runs on every base row, here only on the rows
+    * `where` keeps. `where` reads base columns. */
+  def current(where: Column): DataFrame = merged(Some(where))
+
+  private def merged(where: Option[Column]): DataFrame = {
     val (snapRows, snapKeys, snapFields, snapBase) = snapshot()
-    if (snapKeys.isEmpty) snapBase
+    val base = where.fold(snapBase)(snapBase.filter)
+    if (snapKeys.isEmpty) base
     else {
       val schema = StructType(snapFields)
       val delta = spark.createDataFrame(
         snapRows.map(m => Row.fromSeq(schema.map(f => m.getOrElse(f.name, null)))).asJava,
         schema)
-      withoutSuperseded(snapBase, snapKeys)
-        .unionByName(delta, allowMissingColumns = true)
+      withoutSuperseded(base, snapKeys)
+        .unionByName(where.fold(delta)(delta.filter), allowMissingColumns = true)
     }
   }
 
@@ -986,9 +989,9 @@ final class EntityState(
       want.forall { case (c, v) => v != null && r.get(c).contains(v) })
     val inBase =
       if (!want.keys.forall(snapBase.columns.contains)) 0L
-      else want.foldLeft(withoutSuperseded(snapBase, snapKeys)) {
+      else withoutSuperseded(want.foldLeft(snapBase) {
         case (df, (c, v)) => df.filter(col(c) === lit(v))
-      }.count()
+      }, snapKeys).count()
     inJournal + inBase
   }
 

@@ -94,6 +94,33 @@ class StateStoreSpec extends AnyFunSuite {
     assert(e.lookupBy("v", "b").exists(_("id") == null))
   }
 
+  test("current(where) answers current().filter(where): patched, tombstoned, new and null-key rows, single and composite keys") {
+    import spark.implicits._
+    def same(e: EntityState, where: org.apache.spark.sql.Column, expected: Seq[String]): Unit = {
+      val pushed = e.current(where).collect().map(_.toString).sorted.toSeq
+      assert(pushed == e.current().filter(where).collect().map(_.toString).sorted.toSeq)
+      assert(pushed == expected)
+    }
+    val single = new EntityState(spark,
+      () => Seq[(Option[Long], String)]((Some(1L), "a"), (None, "b"), (Some(2L), "b"), (Some(3L), "b"))
+        .toDF("id", "v"),
+      Seq("id"))
+    same(single, col("v") === "b", Seq("[2,b]", "[3,b]", "[null,b]")) // empty journal: the base, filtered
+    single.upsert(Map("id" -> 2L, "v" -> "c")) // a base match patched out of the filter
+    single.upsert(Map("id" -> 4L, "v" -> "b")) // a new journal match
+    assert(single.delete(Seq(3L)))             // a tombstoned base match
+    same(single, col("v") === "b", Seq("[4,b]", "[null,b]"))
+    same(single, col("v") =!= "b", Seq("[1,a]", "[2,c]"))
+    val composite = new EntityState(spark,
+      () => Seq((1L, 1, "x"), (1L, 2, "x"), (2L, 1, "x"), (2L, 2, "y")).toDF("k1", "k2", "v"),
+      Seq("k1", "k2"))
+    composite.upsert(Map("k1" -> 1L, "k2" -> 2, "v" -> "y"))
+    composite.upsert(Map("k1" -> 2L, "k2" -> 3, "v" -> "x"))
+    assert(composite.delete(Seq(2L, 1)))
+    same(composite, col("v") === "x", Seq("[1,1,x]", "[2,3,x]"))
+    same(composite, col("v") === "y", Seq("[1,2,y]", "[2,2,y]"))
+  }
+
   test("an armed approve session starts no Spark job once the store is warm: every write guard answers from the journal") {
     val secret = "job-free-secret"
     val (server, store) = RestServe.startWithStore(spark, dir, 0, authSecret = Some(secret))
