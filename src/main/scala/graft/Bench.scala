@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Counts in-band Spark noise that is NOT a query failure: tasks that
   * ended for any reason but Success (a retried/killed task logs a
@@ -66,14 +65,7 @@ object Bench {
     val (deadRuns, legacyDirs) = Scratch.sweepStale()
     System.err.println(s"[bench] scratch sweep: $deadRuns dead run roots, $legacyDirs legacy dirs")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val warnings = new BenchWarnListener
     spark.sparkContext.addSparkListener(warnings)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * ([[Sessions.builder]] sets it, or `.withExtensions(new GraftExtensions)`).
   * Injected functions are session-bound builtins — available to SQL and
   * `call_function` alike, on every executor, with no per-query
   * registration. `VectorFunctions.register` remains as the programmatic

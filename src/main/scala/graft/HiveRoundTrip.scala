@@ -25,18 +25,7 @@ import org.apache.spark.sql.SparkSession
 object HiveRoundTrip {
 
   private def session(base: String): SparkSession =
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-hive-roundtrip")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-      .getOrCreate()
+    Sessions.hive(2, base).appName("graft-hive-roundtrip").getOrCreate()
 
   def main(args: Array[String]): Unit = {
     val Array(phase, base, sfDir) = args

@@ -1,29 +1,21 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool for the optimization rounds: capture `.explain("formatted")`
   * for a named list of catalog queries into per-query files —
   * `plans/rNN/<query>_<suffix>.txt` — the before/after plan evidence the
-  * optimization writeup cites. Mirrors the bench's session shape
-  * (local[32], shuffle.partitions=32, AQE defaults); each query is
-  * executed once first so the AQE-FINAL plan is captured.
+  * optimization writeup cites. Runs the bench's session shape
+  * ([[Sessions.builder]] at `SPARK_GRAFT_CPUS` cores, AQE defaults);
+  * each query is executed once first so the AQE-FINAL plan is captured.
   *
-  *   sbt "runMain graft.PlanCapture /root/testdata/sf0.1 plans/r13 before q1,q2,..."
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.PlanCapture <sfDir> plans/r13 before q1,q2,..."
   */
 object PlanCapture {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, list) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     graft.operators.CatalogOps.ensure(spark, sfDir)

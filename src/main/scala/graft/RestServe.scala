@@ -57,11 +57,15 @@ import org.apache.spark.sql.functions._
   * pre-auth stand-in, kept so analytics harnesses need no tokens.
   *
   * Consistency upgrade, stated: every mutation runs under
-  * [[StateStore.mutate]] (one store-wide lock), so read-check-write
-  * sequences are linearizable — the reference's capacity and balance
-  * guards admit overshoot under concurrency (index.js:816-822; SURVEY
-  * §3.3). RestWriteSpec's parallel purchase probe pins lost-update
-  * freedom.
+  * [[StateStore.mutateOn]], holding the locks of the entities its route
+  * declares it writes (the store gate's read side, then each entity's
+  * lock in canonical order). Writers to disjoint entities run
+  * concurrently; writers that share an entity — every cross-entity
+  * invariant lists both of its entities — serialize, so each route's
+  * read-check-write sequence is linearizable against every other writer
+  * of what it writes. The reference's capacity and balance guards admit
+  * overshoot under concurrency (index.js:816-822; SURVEY §3.3).
+  * RestWriteSpec's parallel purchase probe pins lost-update freedom.
   *
   * Serving discipline at scale — no route may trigger an unbounded
   * driver collect (the engine-wide ban on corpus-sized collects):
@@ -187,14 +191,12 @@ object RestServe {
     * Right rendered as the 200 row payload. */
   private final case class CheckedReadH(run: Map[String, String] => Either[Res, DataFrame])
       extends Handler
-  /** Mutation: runs under the store lock. */
   /** Mutation route. `touches` = the entities the handler may WRITE:
     * the dispatch takes exactly those locks (canonical order) under
     * the store gate's read side, so writes to DISJOINT entities run
     * concurrently while overlapping writers — including every
     * cross-entity invariant, which lists both its entities —
-    * serialize (StateStore's CONSISTENCY block). None = the
-    * store-wide exclusive lock (unknown touch set); Some(Nil) is the
+    * serialize (StateStore's CONSISTENCY block). Nil is the
     * pure-computation form (no entity lock at all). Guard READS of
     * other entities deliberately take no lock — point-in-time reads,
     * the reference's own posture — because the no-lost-update and
@@ -202,7 +204,7 @@ object RestServe {
     * serialized (the debit path always locks the balance's entity). */
   private final case class WriteH(
       run: (Map[String, String], Map[String, Any]) => Res,
-      touches: Option[Seq[String]] = None)
+      touches: Seq[String])
       extends Handler
   /** Body-parameterized READ (the vector-search extension): parses the
     * bounded JSON body exactly like WriteH but runs NO mutation and
@@ -219,23 +221,29 @@ object RestServe {
     startWithStore(spark, dir, port)._1
 
   /** Start the façade plus its backing state store (specs assert state
-    * content hash-equal to the batch w-family programs through it;
-    * `autoCompactAt` bounds every entity journal — see
-    * [[StateStore.mutate]]). `authSecret = Some(s)` arms the
-    * reference's middleware chains on every route (see the Identity
-    * scaladoc block); None runs the façade open. */
-  /** `annStatePath = Some(p)` additionally serves the LIVING vector
+    * content hash-equal to the batch w-family programs through it).
+    *
+    * `autoCompactAt` bounds every entity journal (see
+    * [[StateStore.mutateOn]]).
+    *
+    * `authSecret = Some(s)` arms the reference's middleware chains on
+    * every route (see the Identity scaladoc block); None runs the
+    * façade open.
+    *
+    * `annStatePath = Some(p)` additionally serves the LIVING vector
     * index (graft.streaming.StreamingAnnIngest) at POST /ann/query —
     * the one ENGINE-EXTENSION route (clearly outside the reference's
     * surface, which is why it lives under its own /ann namespace):
     * body {"embedding": [floats], "k": n?} answers the payload's
     * exact-cosine top-k over history ∪ everything the stream has
-    * ingested, through topK's bucket-pruned serving path. */
-  /** `walPath = Some(p)` makes the store DURABLE: every acknowledged
+    * ingested, through topK's bucket-pruned serving path.
+    *
+    * `walPath = Some(p)` makes the store DURABLE: every acknowledged
     * mutation is fsynced to the write-ahead log before its response,
     * and a façade restarted over the same path replays it (see
-    * [[StateStore]]'s DURABILITY block; kill/restart spec-pinned). */
-  /** `publishViewsAs = Some(prefix)` additionally publishes every
+    * [[StateStore]]'s DURABILITY block; kill/restart spec-pinned).
+    *
+    * `publishViewsAs = Some(prefix)` additionally publishes every
     * entity's LIVE merged relation as `global_temp.<prefix>_<entity>`
     * after each mutation — the bridge that lets an in-process Thrift
     * server (or any session on the same context) read the store's
@@ -1069,28 +1077,28 @@ object RestServe {
       // concurrency contract in WriteH's scaladoc): single-entity
       // writers run concurrently when disjoint; cross-entity
       // invariants list every written entity and stay linearizable.
-      Route("POST",   "/users",                          WriteH(postUsers, Some(Seq("users")))),                       // :377 open
-      Route("POST",   "/tasks",                          WriteH(postTasks, Some(Seq("tasks", "users"))), FBToken),    // :443
-      Route("PATCH",  "/tasks/{id}",                     WriteH(patchTask, Some(Seq("tasks"))), FBToken),             // :650
-      Route("DELETE", "/tasks/{id}",                     WriteH(deleteTask, Some(Seq("tasks"))), FBToken),            // :684
-      Route("DELETE", "/api/admin/tasks/{id}",           WriteH(adminDeleteTask, Some(Seq("tasks"))), AdminReq),      // :1175
-      Route("PATCH",  "/refund-coins",                   WriteH(refundCoins, Some(Seq("users"))), FBToken),           // :708
-      Route("POST",   "/purchase-coin",                  WriteH(purchaseCoin, Some(Seq("users", "payments"))), FBToken), // :738
-      Route("POST",   "/api/payments/record",            WriteH(paymentsRecord, Some(Seq("payments", "users"))), FBToken), // :292
-      Route("POST",   "/create-payment-intent",          WriteH(paymentIntent, Some(Nil)), FBToken),                  // :260 (writes nothing)
-      Route("POST",   "/api/submissions",                WriteH(postApiSubmission, Some(Seq("submissions", "notifications"))), workerOnly), // :198
-      Route("POST",   "/submissions",                    WriteH(postSubmission, Some(Seq("submissions")))),            // :924 open
-      Route("PATCH",  "/api/submissions/{id}",           WriteH(patchSubmission, Some(Seq("submissions", "notifications"))), buyerOnly), // :132
-      Route("PATCH",  "/buyer/submissions/{id}/approve", WriteH(approveSubmission, Some(Seq("submissions", "users"))), FBToken), // :799
-      Route("PATCH",  "/buyer/submissions/{id}/reject",  WriteH(rejectSubmission, Some(Seq("submissions"))), FBToken), // :853
-      Route("PUT",    "/api/submissions/approve/{id}",   WriteH(putSubmissionStatus("approved"), Some(Seq("submissions"))), FBToken), // :882
-      Route("PUT",    "/api/submissions/reject/{id}",    WriteH(putSubmissionStatus("rejected"), Some(Seq("submissions"))), FBToken), // :904
-      Route("POST",   "/withdrawals",                    WriteH(postWithdrawal, Some(Seq("withdrawals"))), FBToken),  // :1046
-      Route("PATCH",  "/api/withdrawals/{id}",           WriteH(patchWithdrawal, Some(Seq("withdrawals", "notifications"))), AdminReq), // :170
-      Route("POST",   "/admin/withdrawals/{id}/approve", WriteH(adminApproveWithdrawal, Some(Seq("withdrawals", "users"))), AdminReq), // :1336
-      Route("DELETE", "/api/notifications/{id}",         WriteH(deleteNotification, Some(Seq("notifications"))), FBToken), // :241
-      Route("DELETE", "/admin/users/{email}",            WriteH(adminDeleteUser, Some(Seq("users"))), AdminReq),      // :1125
-      Route("PATCH",  "/admin/users/{email}/role",       WriteH(adminPatchRole, Some(Seq("users"))), AdminReq)        // :1141
+      Route("POST",   "/users",                          WriteH(postUsers, Seq("users"))),                       // :377 open
+      Route("POST",   "/tasks",                          WriteH(postTasks, Seq("tasks", "users")), FBToken),    // :443
+      Route("PATCH",  "/tasks/{id}",                     WriteH(patchTask, Seq("tasks")), FBToken),             // :650
+      Route("DELETE", "/tasks/{id}",                     WriteH(deleteTask, Seq("tasks")), FBToken),            // :684
+      Route("DELETE", "/api/admin/tasks/{id}",           WriteH(adminDeleteTask, Seq("tasks")), AdminReq),      // :1175
+      Route("PATCH",  "/refund-coins",                   WriteH(refundCoins, Seq("users")), FBToken),           // :708
+      Route("POST",   "/purchase-coin",                  WriteH(purchaseCoin, Seq("users", "payments")), FBToken), // :738
+      Route("POST",   "/api/payments/record",            WriteH(paymentsRecord, Seq("payments", "users")), FBToken), // :292
+      Route("POST",   "/create-payment-intent",          WriteH(paymentIntent, Nil), FBToken),                  // :260 (writes nothing)
+      Route("POST",   "/api/submissions",                WriteH(postApiSubmission, Seq("submissions", "notifications")), workerOnly), // :198
+      Route("POST",   "/submissions",                    WriteH(postSubmission, Seq("submissions"))),            // :924 open
+      Route("PATCH",  "/api/submissions/{id}",           WriteH(patchSubmission, Seq("submissions", "notifications")), buyerOnly), // :132
+      Route("PATCH",  "/buyer/submissions/{id}/approve", WriteH(approveSubmission, Seq("submissions", "users")), FBToken), // :799
+      Route("PATCH",  "/buyer/submissions/{id}/reject",  WriteH(rejectSubmission, Seq("submissions")), FBToken), // :853
+      Route("PUT",    "/api/submissions/approve/{id}",   WriteH(putSubmissionStatus("approved"), Seq("submissions")), FBToken), // :882
+      Route("PUT",    "/api/submissions/reject/{id}",    WriteH(putSubmissionStatus("rejected"), Seq("submissions")), FBToken), // :904
+      Route("POST",   "/withdrawals",                    WriteH(postWithdrawal, Seq("withdrawals")), FBToken),  // :1046
+      Route("PATCH",  "/api/withdrawals/{id}",           WriteH(patchWithdrawal, Seq("withdrawals", "notifications")), AdminReq), // :170
+      Route("POST",   "/admin/withdrawals/{id}/approve", WriteH(adminApproveWithdrawal, Seq("withdrawals", "users")), AdminReq), // :1336
+      Route("DELETE", "/api/notifications/{id}",         WriteH(deleteNotification, Seq("notifications")), FBToken), // :241
+      Route("DELETE", "/admin/users/{email}",            WriteH(adminDeleteUser, Seq("users")), AdminReq),      // :1125
+      Route("PATCH",  "/admin/users/{email}/role",       WriteH(adminPatchRole, Seq("users")), AdminReq)        // :1141
     ) ++ annStatePath.map(sp =>
       // ENGINE EXTENSION (no reference twin — hence the /ann
       // namespace): vector search over the living index. The payload
@@ -1281,10 +1289,7 @@ object RestServe {
                           // precedes the journal update, so a rejected
                           // op leaves no partial row.
                           val res =
-                            try touches match {
-                              case Some(names) => store.mutateOn(names)(run(params, body))
-                              case None        => store.mutate(run(params, body))
-                            }
+                            try store.mutateOn(touches)(run(params, body))
                             catch {
                               case _: IllegalArgumentException =>
                                 msg(400, "malformed field value")
@@ -1318,14 +1323,7 @@ object RestServe {
       case Array(d, p)    => (d, p, None)
       case Array(d, p, s) => (d, p, Some(s))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     startWithStore(spark, sfDir, port.toInt, authSecret = secret)
     println(s"graft REST facade listening on 127.0.0.1:$port over $sfDir" +

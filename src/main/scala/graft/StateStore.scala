@@ -137,9 +137,9 @@ final class StateStore(spark: SparkSession, dir: String,
 
   private val activeBatch = new ThreadLocal[mutable.ArrayBuffer[PendingOp]]
 
-  private def entity(name: String, baseF: () => DataFrame,
+  private def entity(name: String, base: DataFrame,
                      keyCols: Seq[String]): EntityState =
-    new EntityState(spark, baseF, keyCols,
+    new EntityState(spark, base, keyCols,
       (ent, del, key, row, prior) => if (!replaying) {
         val op = PendingOp(name, ent, del, key, row, tick.get(), prior)
         val buf = activeBatch.get()
@@ -192,13 +192,13 @@ final class StateStore(spark: SparkSession, dir: String,
     * sharing one base relation, each with its own journal);
     * submissions≙lineitem (composite natural key);
     * notifications≙events. */
-  val users         = entity("users",         () => t.customer, Seq("c_custkey"))
-  val tasks         = entity("tasks",         () => t.orders,   Seq("o_orderkey"))
-  val payments      = entity("payments",      () => t.orders,   Seq("o_orderkey"))
-  val withdrawals   = entity("withdrawals",   () => t.orders,   Seq("o_orderkey"))
-  val submissions   = entity("submissions",   () => t.lineitem,
+  val users         = entity("users",         t.customer, Seq("c_custkey"))
+  val tasks         = entity("tasks",         t.orders,   Seq("o_orderkey"))
+  val payments      = entity("payments",      t.orders,   Seq("o_orderkey"))
+  val withdrawals   = entity("withdrawals",   t.orders,   Seq("o_orderkey"))
+  val submissions   = entity("submissions",   t.lineitem,
     Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
-  val notifications = entity("notifications", () => t.events,   Seq("event_id"))
+  val notifications = entity("notifications", t.events,   Seq("event_id"))
 
   private val tick = new java.util.concurrent.atomic.AtomicLong(0L)
   private val epochMs = 1767225600000L // 2026-01-01T00:00:00Z
@@ -483,27 +483,28 @@ object StateStore {
     * snapshot dir without a manifest is a crash remnant and is
     * invisible. Accepts the pre-round-11 array form (every listed
     * entity was written AT that manifest's own version). */
-  private[graft] def allSnapshots(root: String): Seq[(Long, Map[String, Long], Long)] = {
-    val snap = new java.io.File(s"$root/snap")
-    Option(snap.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v")
-        && f.getName.drop(1).forall(_.isDigit))
-      .map(_.getName.drop(1).toLong).sorted.reverse
-      .flatMap { v =>
-        val m = new java.io.File(s"$root/snap/v$v/manifest.json")
-        if (!m.exists()) None
-        else try {
-          val n = manifestMapper.readTree(m)
-          val ents = n.get("entities")
-          val ptrs =
-            if (ents.isArray)
-              ents.elements().asScala.map(_.asText() -> v).toMap
-            else
-              ents.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-          Some((v, ptrs, n.get("tick").asLong()))
-        } catch { case NonFatal(_) => None }
-      }
-  }
+  private[graft] def allSnapshots(root: String): Seq[(Long, Map[String, Long], Long)] =
+    versionDirs(root).sortBy(-_._1).flatMap { case (v, vdir) =>
+      val m = new java.io.File(vdir, "manifest.json")
+      if (!m.exists()) None
+      else try {
+        val n = manifestMapper.readTree(m)
+        val ents = n.get("entities")
+        val ptrs =
+          if (ents.isArray)
+            ents.elements().asScala.map(_.asText() -> v).toMap
+          else
+            ents.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+        Some((v, ptrs, n.get("tick").asLong()))
+      } catch { case NonFatal(_) => None }
+    }
+
+  /** Every `v<N>` version dir under `<root>/snap`, committed or not, as
+    * (N, dir) in listing order. */
+  private def versionDirs(root: String): Seq[(Long, java.io.File)] =
+    Option(new java.io.File(s"$root/snap").listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.matches("v[0-9]+"))
+      .map(f => f.getName.drop(1).toLong -> f)
 
   /** The latest committed checkpoint (recovery's entry point). */
   private[graft] def latestSnapshot(root: String): Option[(Long, Map[String, Long], Long)] =
@@ -513,14 +514,8 @@ object StateStore {
     * manifest-less remnants of crashed or FAILED checkpoint attempts —
     * plus one. See checkpointLocked for why a failed attempt's number
     * must never be re-used. */
-  private[graft] def nextVersion(root: String): Long = {
-    val snap = new java.io.File(s"$root/snap")
-    val vs = Option(snap.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v")
-        && f.getName.drop(1).forall(_.isDigit))
-      .map(_.getName.drop(1).toLong)
-    if (vs.isEmpty) 0L else vs.max + 1L
-  }
+  private[graft] def nextVersion(root: String): Long =
+    versionDirs(root).map(_._1).maxOption.fold(0L)(_ + 1L)
 
   /** Test-only fault injection, fired at the start of [[writeManifest]]:
     * lets specs exercise the failed-checkpoint window (snapshots written,
@@ -567,23 +562,18 @@ object StateStore {
     val keepVersions = kept.map(_._1).toSet
     val keepEntityDirs: Set[(String, Long)] =
       kept.flatMap(_._2.toSeq.map { case (n, v) => (n, v) }).toSet
-    val snap = new java.io.File(s"$root/snap")
-    Option(snap.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v")
-        && f.getName.drop(1).forall(_.isDigit))
-      .foreach { vdir =>
-        val v = vdir.getName.drop(1).toLong
-        Option(vdir.listFiles()).toSeq.flatten
-          .filter(_.isDirectory)
-          .filterNot(e => keepEntityDirs((e.getName, v)))
-          .foreach(Scratch.deleteRecursively)
-        // A version dir holding no entity data and no kept manifest is
-        // an empty husk (its manifest, if any, is older than the grace
-        // window) — remove it whole.
-        val residual = Option(vdir.listFiles()).toSeq.flatten
-        if (!keepVersions(v) && !residual.exists(_.isDirectory))
-          Scratch.deleteRecursively(vdir)
-      }
+    versionDirs(root).foreach { case (v, vdir) =>
+      Option(vdir.listFiles()).toSeq.flatten
+        .filter(_.isDirectory)
+        .filterNot(e => keepEntityDirs((e.getName, v)))
+        .foreach(Scratch.deleteRecursively)
+      // A version dir holding no entity data and no kept manifest is
+      // an empty husk (its manifest, if any, is older than the grace
+      // window) — remove it whole.
+      val residual = Option(vdir.listFiles()).toSeq.flatten
+      if (!keepVersions(v) && !residual.exists(_.isDirectory))
+        Scratch.deleteRecursively(vdir)
+    }
   }
 
   /** Best-effort directory fsync: on Linux this makes a create/rename/
@@ -606,7 +596,7 @@ object StateStore {
   * rollback token) after each journal mutation lands. */
 final class EntityState(
     spark: SparkSession,
-    baseF: () => DataFrame,
+    initialBase: DataFrame,
     val keyCols: Seq[String],
     record: (EntityState, Boolean, Seq[Any], Option[Map[String, Any]],
              Option[Option[Map[String, Any]]]) => Unit =
@@ -621,11 +611,11 @@ final class EntityState(
 
   /** The current base relation — the fixture parquet until [[compact]]
     * swaps in a materialized merge (which then CARRIES any evolved
-    * columns in its own schema). */
-  private var baseRel: Option[DataFrame] = None
-  private def base: DataFrame = synchronized {
-    baseRel.getOrElse { val b = baseF(); baseRel = Some(b); b }
-  }
+    * columns in its own schema). Resolved when the entity is built, so
+    * no request pays the relation's schema read (a Spark job for a
+    * parquet source) under the entity lock. Swapped only under the
+    * monitor. */
+  @volatile private var base: DataFrame = initialBase
 
   /** True when this entity has journal ops the latest checkpoint
     * snapshot does not contain — live, or replayed from the WAL (a
@@ -639,9 +629,9 @@ final class EntityState(
   @volatile private[graft] var dirtySinceCheckpoint = false
 
   /** Recovery: adopt a checkpoint snapshot dir as this entity's base
-    * (replacing the fixture loader). */
+    * (replacing the fixture relation). */
   private[graft] def adoptBase(path: String): Unit = synchronized {
-    baseRel = Some(spark.read.parquet(path))
+    base = spark.read.parquet(path)
     blooms = Map.empty
     dirtySinceCheckpoint = false
   }
@@ -651,12 +641,20 @@ final class EntityState(
     * with an empty journal too (an auto-compacted entity's state lives
     * in a scratch base a new process cannot see — the snapshot
     * materializes it durably). */
-  private[graft] def compactTo(path: String): Unit = synchronized {
+  private[graft] def compactTo(path: String): Unit = synchronized(foldInto(path))
+
+  /** The one fold: write the merged view to `path`, fold the journal's
+    * values into the live sketches (no rebuild job), clear the journal
+    * and adopt `path` as the base. Callers hold the monitor for the
+    * whole pass (current() re-enters it): a write sneaking in between
+    * the merge snapshot and journal.clear() would otherwise be
+    * silently dropped. */
+  private def foldInto(path: String): Unit = {
     current().write.mode("overwrite").parquet(path)
     foldJournalIntoBlooms()
     journal.clear()
     extras = Vector.empty
-    baseRel = Some(spark.read.parquet(path))
+    base = spark.read.parquet(path)
   }
 
   /** key → Some(full row as column→value) for upserts, None for
@@ -1000,18 +998,9 @@ final class EntityState(
     * plans return to a bare scan; content is unchanged (spec-pinned).
     * Evolved columns become REAL columns of the compacted base. */
   def compact(): Unit = synchronized {
-    // The whole pass holds the entity lock (current() re-enters it):
-    // a write sneaking in between the merge snapshot and journal.clear()
-    // would otherwise be silently dropped. Maintenance blocks writers;
-    // that is the copy-on-write compaction contract (w9).
-    if (journal.nonEmpty) {
-      val out = Scratch.tempDir("state_compact")
-      current().write.mode("overwrite").parquet(out)
-      foldJournalIntoBlooms() // keep the sketches live across the fold
-      journal.clear()
-      extras = Vector.empty
-      baseRel = Some(spark.read.parquet(out))
-    }
+    // Maintenance blocks writers for the whole fold; that is the
+    // copy-on-write compaction contract (w9).
+    if (journal.nonEmpty) foldInto(Scratch.tempDir("state_compact"))
   }
 }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The SERVING surface — the reference is literally a server (it answers
   * queries over a wire protocol: /root/reference/index.js:1409-1411
   * self-describes as an HTTP API with 47 routes), so parity needs a
@@ -172,15 +170,8 @@ object ThriftServe {
       System.setProperty("hive.server2.custom.authentication.class",
         "graft.GraftThriftAuth")
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = Sessions.hive(4, base)
       .appName("graft-thrift-serve")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
       // Builder-level (SparkConf) so every per-connection session
       // inherits them: the parity parser profile, and the NANOS
       // narrowing ONLY when the events footer actually carries NANOS
@@ -192,8 +183,6 @@ object ThriftServe {
       .config("spark.sql.legacy.parquet.nanosAsLong",
         Tables.eventsCarriesNanos(sfDir).toString)
       .config("spark.sql.hive.thriftServer.singleSession", "false")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,7 +9,7 @@ object Verify {
     val (deadRuns, legacyDirs) = Scratch.sweepStale()
     System.err.println(s"[verify] scratch sweep: $deadRuns dead run roots, $legacyDirs legacy dirs")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     // SPARK_GRAFT_MASTER=local-cluster[2,4,4096] runs the SAME dump
     // with driver and executors in SEPARATE JVMs (r11 verdict #5):
     // local[N] never exercises closure serialization, broadcast
@@ -19,12 +18,7 @@ object Verify {
     // Executors need the engine on their classpath explicitly (a
     // local-cluster worker spawns bare JVMs; there is no jar shipping).
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val builder = Sessions.builder(cpus).master(master)
     if (master.startsWith("local-cluster"))
       builder.config("spark.executor.extraClassPath",
         System.getProperty("java.class.path"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-JVM half of StateStoreSpec's kill/restart durability test:
   * starts the write façade with a WAL-backed store on an ephemeral
   * port, prints `WAL_READY port=<p>`, and serves until killed. The
@@ -18,13 +16,7 @@ import org.apache.spark.sql.SparkSession
 object WalCrashServe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, walPath) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (server, _) = RestServe.startWithStore(spark, sfDir, 0,
       walPath = Some(walPath))

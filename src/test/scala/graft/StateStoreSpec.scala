@@ -85,7 +85,7 @@ class StateStoreSpec extends AnyFunSuite {
   test("single-column key merge is null-safe: a base row with a null key survives a non-empty journal and counts") {
     import spark.implicits._
     val e = new EntityState(spark,
-      () => Seq[(Option[Long], String)]((Some(1L), "a"), (None, "b"), (Some(2L), "b")).toDF("id", "v"),
+      Seq[(Option[Long], String)]((Some(1L), "a"), (None, "b"), (Some(2L), "b")).toDF("id", "v"),
       Seq("id"))
     e.upsert(Map("id" -> 2L, "v" -> "c"))
     assert(rowsOf(e) == Seq("[1,a]", "[2,c]", "[null,b]"),
@@ -102,7 +102,7 @@ class StateStoreSpec extends AnyFunSuite {
       assert(pushed == expected)
     }
     val single = new EntityState(spark,
-      () => Seq[(Option[Long], String)]((Some(1L), "a"), (None, "b"), (Some(2L), "b"), (Some(3L), "b"))
+      Seq[(Option[Long], String)]((Some(1L), "a"), (None, "b"), (Some(2L), "b"), (Some(3L), "b"))
         .toDF("id", "v"),
       Seq("id"))
     same(single, col("v") === "b", Seq("[2,b]", "[3,b]", "[null,b]")) // empty journal: the base, filtered
@@ -112,7 +112,7 @@ class StateStoreSpec extends AnyFunSuite {
     same(single, col("v") === "b", Seq("[4,b]", "[null,b]"))
     same(single, col("v") =!= "b", Seq("[1,a]", "[2,c]"))
     val composite = new EntityState(spark,
-      () => Seq((1L, 1, "x"), (1L, 2, "x"), (2L, 1, "x"), (2L, 2, "y")).toDF("k1", "k2", "v"),
+      Seq((1L, 1, "x"), (1L, 2, "x"), (2L, 1, "x"), (2L, 2, "y")).toDF("k1", "k2", "v"),
       Seq("k1", "k2"))
     composite.upsert(Map("k1" -> 1L, "k2" -> 2, "v" -> "y"))
     composite.upsert(Map("k1" -> 2L, "k2" -> 3, "v" -> "x"))
@@ -133,12 +133,10 @@ class StateStoreSpec extends AnyFunSuite {
         ("admin@jobs.io", "buyer@jobs.io", "w1@jobs.io", "w2@jobs.io")
       // The store's one-time warm-up: registering the admin builds the
       // users e-mail Bloom and the users id watermark; the other
-      // single-key entities' watermarks follow, and the submissions
-      // base relation is loaded (its parquet schema read is a job, once
-      // per relation).
+      // single-key entities' watermarks follow. The base relations were
+      // resolved when the store was built.
       assert(http.post("/users", s"""{"name":"Admin","email":"$admin","role":"admin"}""")._1 == 201)
       Seq(store.tasks, store.payments, store.withdrawals, store.notifications).foreach(_.newId())
-      store.submissions.current()
       // The façade's request threads set no job group, so every job a
       // request starts lands in the ungrouped set of the status store.
       val sc = spark.sparkContext
@@ -180,6 +178,30 @@ class StateStoreSpec extends AnyFunSuite {
         case _ => ()
       }
     }
+  }
+
+  test("a store resolves its base relations when it is built: the first write to an unread entity starts no Spark job") {
+    // A fresh copy of the fixture, so Tables' relation cache holds none
+    // of its relations and their parquet schema reads (a job each) are
+    // still to come.
+    val copy = Paths.get(Scratch.tempDir("eager_base"))
+    val src = Paths.get(dir)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val to = copy.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    } finally walk.close()
+    val store = new StateStore(spark, copy.toString)
+    val sc = spark.sparkContext
+    sc.setJobGroup("eager-base", "StateStoreSpec first write")
+    try {
+      store.submissions.upsert(Map("l_orderkey" -> 900001L, "l_linenumber" -> 1,
+        "l_partkey" -> 1L, "l_suppkey" -> 1L, "status" -> "pending"))
+      Thread.sleep(1500) // status store feeds from the async listener bus
+      val jobs = sc.statusTracker.getJobIdsForGroup("eager-base")
+      assert(jobs.isEmpty, s"the first write must start no Spark job, started ${jobs.length}")
+    } finally sc.clearJobGroup()
+    assert(store.submissions.lookup(Seq(900001L, 1, 1L, 1L)).exists(_("status") == "pending"))
   }
 
   // ---- WAL: replay equivalence --------------------------------------

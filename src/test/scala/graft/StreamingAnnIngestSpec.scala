@@ -74,8 +74,7 @@ class StreamingAnnIngestSpec extends AnyFunSuite {
   }
 
   private def stageSlices(src: String, nSlices: Int): Unit =
-    graft.streaming.StreamLshProbe.stageSlices(spark, streamedOdds, src,
-      nSlices, key = "vec_id")
+    StreamSlices.stage(spark, streamedOdds, src, nSlices, key = "vec_id")
 
   private def hitSet(statePath: String): Set[(Long, Long, Long, Double)] = {
     import spark.implicits._

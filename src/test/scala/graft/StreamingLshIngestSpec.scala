@@ -43,11 +43,10 @@ class StreamingLshIngestSpec extends AnyFunSuite {
     }
   }
 
-  /** One copy of the range-slice staging (mtime ordering = arrival =
-    * doc_id order) — shared with the scale probe. */
+  /** Range-slice staging (mtime ordering = arrival = doc_id order). */
   private def stageSlices(src: String, nSlices: Int): Unit = {
     import spark.implicits._
-    graft.streaming.StreamLshProbe.stageSlices(spark,
+    StreamSlices.stage(spark,
       Tables(spark, dir).documents.filter($"doc_id" % 2 === 1), src, nSlices)
   }
 

@@ -7,16 +7,13 @@ import org.apache.spark.sql.SparkSession
   * run-scoped Scratch root ON PURPOSE: every test JVM rebuilds its
   * artifacts (a few seconds at sf0.001) and no spec can green against
   * a stale prior-session warehouse — hygiene bought with rebuild time,
-  * the same trade the bench sweeper makes. */
+  * the same trade the bench sweeper makes. Four cores, whatever
+  * SPARK_GRAFT_CPUS says, so specs plan the same on every box. WARN,
+  * not ERROR: RegistrationSpec reads the engine's WARN events. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val s = Sessions.builder(4)
       .config("spark.sql.warehouse.dir", graft.Scratch.dir("warehouse"))
-      .config("spark.ui.enabled", "false")
       .appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
