@@ -6,8 +6,11 @@ import graft.operators._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` is the engine's public catalog: one named, self-contained
-  * DataFrame program per operator in SURVEY.md §2 (plus the LLM-pipeline
-  * extensions). `oracleSql` carries the ANSI-SQL equivalent the driver runs
+  * program per operator in SURVEY.md §2 (plus the LLM-pipeline
+  * extensions). Each program is either a DataFrame program or its own
+  * oracle text served through `operators.SqlProgram` (where Catalyst
+  * compiles the text to the plan the DataFrame program built, the
+  * text is the one program). `oracleSql` carries the ANSI-SQL equivalent the driver runs
   * in DuckDB over the same parquet for hash-compare; entries are omitted
   * only where the operator is not SQL-expressible (those get a rows-only
   * check).
@@ -65,7 +68,7 @@ object SparkEntry {
     * profile (GraftExtensions dialect-compat spellings +
     * `spark.sql.parser.escapedStringLiterals=true`) — the engine's
     * one-text-three-engines surface. Asserted row-identical to the
-    * DataFrame programs by `SqlParitySpec`, and served over the
+    * catalog programs by `SqlParitySpec`, and served over the
     * Thrift/JDBC wire by `ThriftServe` (hash-compared end-to-end by
     * `ThriftServerSpec`). The remaining oracle texts use constructs
     * with no shared spelling (see SqlParitySpec's scaladoc). */

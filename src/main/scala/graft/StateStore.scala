@@ -54,8 +54,8 @@ import org.apache.spark.sql.types._
   *
   * CONSISTENCY — per-entity write concurrency (round 11): mutation
   * bodies run under a two-level lock. A store-wide
-  * ReentrantReadWriteLock is the GATE: every [[mutate]]/[[mutateOn]]
-  * holds its read side, [[checkpoint]] holds its write side (so a
+  * ReentrantReadWriteLock is the GATE: every [[mutateOn]] holds its
+  * read side, [[checkpoint]] holds its write side (so a
   * snapshot+rotate never interleaves an in-flight mutation — an op
   * landing between snapshot and rotation would be silently folded
   * away). Under the gate, [[mutateOn]] takes the named entities' locks
@@ -63,8 +63,6 @@ import org.apache.spark.sql.types._
   * on `users` while a registration and a notification insert run
   * CONCURRENTLY (the r10 verdict: the single store lock capped the
   * write path at ~95 rps with 8 threads queueing behind one writer).
-  * [[mutate]] with no entity list is the store-wide exclusive form
-  * (gate write lock) for bodies whose touch set is unknown.
   * Cross-entity invariants (approve = submission $set + user $inc;
   * task insert = coin debit + task row) name BOTH entities and stay
   * linearizable — the deliberate improvement over the reference's
@@ -144,7 +142,7 @@ final class StateStore(spark: SparkSession, dir: String,
         val op = PendingOp(name, ent, del, key, row, tick.get(), prior)
         val buf = activeBatch.get()
         if (buf != null) buf += op
-        // Direct EntityState calls outside mutate() (specs, probes):
+        // Direct EntityState calls outside mutateOn() (specs, probes):
         // one single-op record, committed immediately — with the same
         // roll-back-on-failed-append contract as the batch path.
         else commitOrUndo(Seq(op))
@@ -252,7 +250,7 @@ final class StateStore(spark: SparkSession, dir: String,
   }
 
   /** Snapshot + rotate (see the CHECKPOINTS scaladoc block): holds the
-    * gate's WRITE side, so mutations routed through [[mutate]] /
+    * gate's WRITE side, so mutations routed through
     * [[mutateOn]] — every façade write — cannot land between the
     * snapshot and the rotation. Direct EntityState calls (specs,
     * probes) are fenced too since round 12: each takes the gate's read
@@ -312,19 +310,6 @@ final class StateStore(spark: SparkSession, dir: String,
       try if (wal.exists(_.sinceRotate >= walCheckpointEvery)) checkpointLocked()
       finally gate.writeLock().unlock()
     }
-
-  /** Store-wide EXCLUSIVE critical section (gate write lock): for
-    * mutation bodies whose entity touch set is unknown. Bodies that
-    * know their write set should use [[mutateOn]] and run concurrently
-    * with disjoint writers. */
-  def mutate[A](body: => A): A = {
-    if (activeBatch.get() != null) return body // nested: outer frame owns commit
-    gate.writeLock().lock()
-    val r = try runBody(body, entities)
-    finally gate.writeLock().unlock()
-    maybeCheckpoint()
-    r
-  }
 
   /** Entity-scoped critical section: gate READ lock (concurrent with
     * other mutations, excluded by checkpoints) + the named entities'

@@ -113,7 +113,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     }
   }
 
-  private def table(name: String): DataFrame =
+  /** The fixture `name` (one of `Tables.names`). */
+  def table(name: String): DataFrame =
     if (name == "events") events else load(name)
 
   /** Register every fixture as a temp view so the same queries run via

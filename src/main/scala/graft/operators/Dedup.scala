@@ -148,16 +148,7 @@ object Dedup extends QueryModule {
   private[graft] def jaccard(c: Column, na: Column, nb: Column): Column =
     c.cast("double") / (na.cast("long") + nb.cast("long") - c).cast("double")
 
-  // ---- d1/d2: exact dedup ----
-
-  /** d1 — duplicate-group summary by content hash (sha2-256). */
-  private def d1(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).documents
-      .groupBy(sha2($"text", 256).as("content_hash"))
-      .agg(count(lit(1)).as("n_copies"), min($"doc_id").as("canonical_id"))
-      .orderBy($"canonical_id")
-  }
+  // ---- d2: exact dedup (d1 is served from its oracle text) ----
 
   /** d2 — the deduplicated corpus: keep the min doc_id per text. */
   private def d2(spark: SparkSession, dir: String): DataFrame = {
@@ -1083,22 +1074,6 @@ object Dedup extends QueryModule {
     })
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe2_incremental_ingest" -> (pipe2 _),
-    "d11_substring_spans"    -> (d11 _),
-    "d12_substring_cut"      -> (d12 _),
-    "d10_incremental_neardup" -> (d10 _),
-    "d8_incremental_dedup"   -> (d8 _),
-    "d6_dedup_normalized"    -> (d6 _),
-    "d1_dedup_exact_groups"  -> (d1 _),
-    "d2_dedup_exact_select"  -> (d2 _),
-    "d3_dedup_ngram_jaccard" -> (d3 _),
-    "d14_containment"        -> (d14 _),
-    "d4_dedup_minhash_lsh"   -> (d4 _),
-    "d5_dedup_simhash"       -> (d5 _),
-    "d5b_simhash_oracle"     -> (d5b _),
-    "d7_dup_clusters"        -> (d7 _))
-
   /** Brute-force jaccard in DuckDB — shared ground truth for d3 (its own
     * oracle) and d4 (valid because LSH recall at j≥0.8 with 16 bands × 2
     * rows is 1−(1−j²)¹⁶ ≈ 1−1e-22 on this data's clean dup/non-dup
@@ -1359,4 +1334,20 @@ object Dedup extends QueryModule {
         |       d.doc_id = coalesce(l.cluster_id, d.doc_id) AS is_canonical
         |FROM documents d LEFT JOIN lbl l ON l.node = d.doc_id
         |ORDER BY d.doc_id""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "pipe2_incremental_ingest" -> (pipe2 _),
+    "d11_substring_spans"    -> (d11 _),
+    "d12_substring_cut"      -> (d12 _),
+    "d10_incremental_neardup" -> (d10 _),
+    "d8_incremental_dedup"   -> (d8 _),
+    "d6_dedup_normalized"    -> (d6 _),
+    "d1_dedup_exact_groups"  -> SqlProgram(oracles("d1_dedup_exact_groups")),
+    "d2_dedup_exact_select"  -> (d2 _),
+    "d3_dedup_ngram_jaccard" -> (d3 _),
+    "d14_containment"        -> (d14 _),
+    "d4_dedup_minhash_lsh"   -> (d4 _),
+    "d5_dedup_simhash"       -> (d5 _),
+    "d5b_simhash_oracle"     -> (d5b _),
+    "d7_dup_clusters"        -> (d7 _))
 }

@@ -27,32 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Events extends QueryModule {
 
-  /** F-ext — JSON field extraction from `events.props` (the one
-    * semi-structured column in the fixtures). */
-  private def e1(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // Deliberately a PLAIN sort (the sortedOnce survey tried this site
-    // and reverted it): the sort's bounds-sampling pass does re-parse
-    // every props string a second time, but the kernel is ONE json
-    // path per row and the derived frame is |events|-sized —
-    // materializing 10M derived rows at the 100× replica read
-    // consistently worse than re-parsing. Cheap-kernel × corpus-sized
-    // output re-derives; it never stores.
-    Tables(spark, dir).events
-      .select($"event_id",
-        get_json_object($"props", "$.k").cast("int").as("k"))
-      .orderBy($"event_id")
-  }
-
-  /** Grouped rollup over the extracted JSON key. */
-  private def e2(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).events
-      .groupBy(get_json_object($"props", "$.k").cast("int").as("k"))
-      .agg(count(lit(1)).as("n"), dsum0($"value").as("sum_value"))
-      .orderBy($"k")
-  }
-
   /** Tumbling 5-minute windows per event_type. */
   private def e3(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -86,18 +60,6 @@ object Events extends QueryModule {
       .select($"user_id", unix_micros($"w.start").as("session_start_us"),
         $"n", $"sum_value")
       .orderBy($"user_id", $"session_start_us")
-  }
-
-  /** Latest event per user — the J2 enrichment pattern done properly
-    * with a ranking window (SURVEY §2.8). */
-  private def e6(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
-    Tables(spark, dir).events
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .select($"user_id", $"event_id", $"ts", $"event_type", $"value")
-      .orderBy($"user_id")
   }
 
   /** e7 — AS-OF join (composed, SURVEY §2.3 note / builder-prompt
@@ -200,36 +162,6 @@ object Events extends QueryModule {
       .groupBy($"cohort_day", $"week_offset")
       .agg(count(lit(1)).as("n_users"))
       .orderBy($"cohort_day", $"week_offset")
-  }
-
-  /** e10 — z-score outlier flagging per event type: the numeric
-    * data-cleaning primitive (drop/inspect rows > 3σ from their group
-    * mean). Group moments come from exact decimal sums (corr's
-    * discipline — `olap_corr`), the tiny stats table broadcasts back
-    * onto the log, and the filter runs at scan parallelism: two passes
-    * over the fact, zero fact shuffles. The 3.0 threshold sits ≥1e-3
-    * from every |z| in the fixture at all SFs (verified) — engine
-    * float divergence is ~1e-15, so the filter can never disagree
-    * across engines; z is rounded to 6 decimals for display parity. */
-  private def e10(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = Tables(spark, dir).events
-    val stats = ev.groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), dsum($"value").as("sx"),
-        dsum($"value" * $"value").as("sxx"))
-      .select($"event_type", ($"sx" / $"n").as("mean"),
-        sqrt(($"n" * $"sxx" - $"sx" * $"sx")
-          / ($"n" * ($"n" - lit(1)))).as("std"))
-    ev.join(broadcast(stats), Seq("event_type"))
-      .withColumn("z", ($"value" - $"mean") / $"std")
-      // std > 0 guard: a singleton group (n=1 → 0/0) or constant-valued
-      // group (std=0) yields z=NaN, and BOTH engines order NaN above 3.0
-      // — without the guard every row of a degenerate group would be
-      // emitted as an "outlier". Degenerate groups have no outliers by
-      // definition.
-      .filter($"std" > 0.0 && abs($"z") > 3.0)
-      .select($"event_id", $"event_type", $"value", round($"z", 6).as("z"))
-      .orderBy($"event_id")
   }
 
   /** e11 — per-user inter-arrival profile: gaps between consecutive
@@ -589,27 +521,6 @@ object Events extends QueryModule {
           * (lit(1.0) / $"n_a" + lit(1.0) / $"n_b")).as("significant_95"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e19_ab_test"          -> (e19 _),
-    "e16_session_paths"    -> (e16 _),
-    "e17_rfm_segments"     -> (e17 _),
-    "e15_count_anomaly" -> (e15 _),
-    "e14_attribution"      -> (e14 _),
-    "e13_dau_wau"          -> (e13 _),
-    "e12_transition_matrix" -> (e12 _),
-    "e11_interarrival"     -> (e11 _),
-    "e10_zscore_outliers"  -> (e10 _),
-    "e9_cohort_retention"  -> (e9 _),
-    "e8_funnel"            -> (e8 _),
-    "w6_scd2_intervals"    -> (w6 _),
-    "e7_asof_join"         -> (e7 _),
-    "e1_json_extract"      -> (e1 _),
-    "e2_json_grouped"      -> (e2 _),
-    "e3_tumbling_window"   -> (e3 _),
-    "e4_sliding_window"    -> (e4 _),
-    "e5_session_window"    -> (e5 _),
-    "e6_latest_per_user"   -> (e6 _))
-
   val oracles: Map[String, String] = Map(
     // e19: the whole readout restated — per-user conversion rollup,
     // parity variant split, and the squared two-proportion z-test with
@@ -942,4 +853,25 @@ object Events extends QueryModule {
         |                               ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events)
         |WHERE rn = 1 ORDER BY user_id""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "e19_ab_test"          -> (e19 _),
+    "e16_session_paths"    -> (e16 _),
+    "e17_rfm_segments"     -> (e17 _),
+    "e15_count_anomaly" -> (e15 _),
+    "e14_attribution"      -> (e14 _),
+    "e13_dau_wau"          -> (e13 _),
+    "e12_transition_matrix" -> (e12 _),
+    "e11_interarrival"     -> (e11 _),
+    "e10_zscore_outliers"  -> SqlProgram(oracles("e10_zscore_outliers")),
+    "e9_cohort_retention"  -> (e9 _),
+    "e8_funnel"            -> (e8 _),
+    "w6_scd2_intervals"    -> (w6 _),
+    "e7_asof_join"         -> (e7 _),
+    "e1_json_extract"      -> SqlProgram(oracles("e1_json_extract")),
+    "e2_json_grouped"      -> SqlProgram(oracles("e2_json_grouped")),
+    "e3_tumbling_window"   -> (e3 _),
+    "e4_sliding_window"    -> (e4 _),
+    "e5_session_window"    -> (e5 _),
+    "e6_latest_per_user"   -> SqlProgram(oracles("e6_latest_per_user")))
 }

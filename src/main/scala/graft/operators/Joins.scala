@@ -30,51 +30,11 @@ object Joins extends QueryModule {
       .filter($"o_orderpriority" === "1-URGENT")
       .select($"o_orderkey")
     // (l_orderkey, l_linenumber) is not unique in the fixture; include
-    // l_partkey/l_suppkey for a total output order (same in j2/j3 below).
+    // l_partkey/l_suppkey for a total output order (the j2/j3 texts too).
     t.lineitem
       .join(urgentOrders, $"l_orderkey" === $"o_orderkey", "left_semi")
       .select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey", $"l_quantity")
       .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
-  }
-
-  /** J2 — enrichment join: the reference's N+1 `findOne` loop with
-    * 'Unknown Task'/'Unknown Buyer' defaults (index.js:350-359) as a
-    * single left-outer broadcast join + coalesce. */
-  private def j2(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    val orders = t.orders
-    val approved = t.lineitem.filter($"l_returnflag" === "A")
-    approved
-      .join(orders, approved("l_orderkey") === orders("o_orderkey"), "left_outer")
-      .select(
-        $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey",
-        coalesce($"o_orderpriority", lit("Unknown Task")).as("task_title"),
-        $"l_extendedprice".as("payable_amount"),
-        coalesce($"o_custkey".cast("string"), lit("Unknown Buyer")).as("buyer_name"))
-      .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
-  }
-
-  /** J3 — two-hop point-chase: submission → its task → the task's buyer
-    * (index.js:205-206), as two inner equi-joins in one plan. */
-  private def j3(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.lineitem.filter($"l_orderkey" < 100L)
-      .join(t.orders, $"l_orderkey" === $"o_orderkey")
-      .join(t.customer, $"o_custkey" === $"c_custkey")
-      .select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey",
-        $"o_orderpriority", $"c_name")
-      .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
-  }
-
-  /** J4 — existence join as authorization: row exists ⟺ authorized
-    * (index.js:808,862). */
-  private def j4(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).orders
-      .filter($"o_orderkey" === 7L && !($"o_orderstatus" <=> "F"))
-      .agg((count(lit(1)) > 0).as("authorized"))
   }
 
   /** Anti-join — the duplicate-registration guard (index.js:388-391) in
@@ -255,17 +215,14 @@ object Joins extends QueryModule {
     import spark.implicits._
     graft.functions.BloomFunctions.register(spark)
     val t = Tables(spark, dir)
-    t.supplier.join(t.nation.filter($"n_name" === "NATION_19"), $"s_nationkey" === $"n_nationkey", "left_semi")
-      .select($"s_suppkey").createOrReplaceTempView("j7_dim_keys")
-    t.lineitem.createOrReplaceTempView("j7_fact")
+    val dim = t.supplier
+      .join(t.nation.filter($"n_name" === "NATION_19"), $"s_nationkey" === $"n_nationkey", "left_semi")
+      .select($"s_suppkey")
     // might_contain's bloom argument must be foldable or a scalar
-    // subquery (Catalyst type check) — hence the SQL phrasing.
-    val pruned = spark.sql(
-      """SELECT l_suppkey, l_extendedprice FROM j7_fact
-        |WHERE graft_might_contain(
-        |        (SELECT graft_bloom_agg(s_suppkey) FROM j7_dim_keys),
-        |        l_suppkey)""".stripMargin)
-    val dim = spark.table("j7_dim_keys")
+    // subquery (Catalyst type check) — hence `scalar()`.
+    val bloom = dim.agg(call_function("graft_bloom_agg", $"s_suppkey")).scalar()
+    val pruned = t.lineitem.select($"l_suppkey", $"l_extendedprice")
+      .filter(call_function("graft_might_contain", bloom, $"l_suppkey"))
     pruned.join(dim, pruned("l_suppkey") === dim("s_suppkey"), "left_semi")
       .groupBy($"l_suppkey")
       .agg(count(lit(1)).as("n_items"), dsum0($"l_extendedprice").as("sum_price"))
@@ -385,20 +342,6 @@ object Joins extends QueryModule {
       .select($"i", $"j", levenshtein($"na", $"nb").cast("long").as("distance"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j10_fuzzy_join" -> (j10 _),
-    "j9_runtime_bloom_join" -> (j9 _),
-    "j8_skew_salted_join" -> (j8 _),
-    "j7_bloom_semi_join"  -> (j7 _),
-    "j11_interval_overlap" -> (j11 _),
-    "j12_asof_join" -> (j12 _),
-    "j6_range_band_join"  -> (j6 _),
-    "j1_semi_join"        -> (j1 _),
-    "j2_enrichment_join"  -> (j2 _),
-    "j3_two_hop_chase"    -> (j3 _),
-    "j4_existence_check"  -> (j4 _),
-    "j5_anti_join_guard"  -> (jAnti _))
-
   val oracles: Map[String, String] = Map(
     // j12: the oracle is the TEXTBOOK form the kernel replaces — the
     // non-equi (ts <= ts) join + per-row argmax over the packed
@@ -489,6 +432,7 @@ object Joins extends QueryModule {
         |WHERE l_orderkey IN
         |  (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
+    // J2 — the N+1 findOne enrichment loop with 'Unknown' defaults (index.js:350-359).
     "j2_enrichment_join" ->
       """SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
         |       coalesce(o.o_orderpriority, 'Unknown Task') AS task_title,
@@ -497,6 +441,7 @@ object Joins extends QueryModule {
         |FROM lineitem l LEFT OUTER JOIN orders o ON l.l_orderkey = o.o_orderkey
         |WHERE l.l_returnflag = 'A'
         |ORDER BY l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey""".stripMargin,
+    // J3 — two-hop point-chase: submission → task → buyer (index.js:205-206).
     "j3_two_hop_chase" ->
       """SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
         |       o.o_orderpriority, c.c_name
@@ -505,6 +450,7 @@ object Joins extends QueryModule {
         |JOIN customer c ON o.o_custkey = c.c_custkey
         |WHERE l.l_orderkey < 100
         |ORDER BY l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey""".stripMargin,
+    // J4 — existence join as authorization (index.js:808,862).
     "j4_existence_check" ->
       """SELECT count(*) > 0 AS authorized FROM orders
         |WHERE o_orderkey = 7 AND o_orderstatus IS DISTINCT FROM 'F'""".stripMargin,
@@ -512,4 +458,18 @@ object Joins extends QueryModule {
       """SELECT c_custkey, c_name FROM customer
         |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
         |ORDER BY c_custkey""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "j10_fuzzy_join" -> (j10 _),
+    "j9_runtime_bloom_join" -> (j9 _),
+    "j8_skew_salted_join" -> (j8 _),
+    "j7_bloom_semi_join"  -> (j7 _),
+    "j11_interval_overlap" -> (j11 _),
+    "j12_asof_join" -> (j12 _),
+    "j6_range_band_join"  -> (j6 _),
+    "j1_semi_join"        -> (j1 _),
+    "j2_enrichment_join"  -> SqlProgram(oracles("j2_enrichment_join")),
+    "j3_two_hop_chase"    -> SqlProgram(oracles("j3_two_hop_chase")),
+    "j4_existence_check"  -> SqlProgram(oracles("j4_existence_check")),
+    "j5_anti_join_guard"  -> (jAnti _))
 }

@@ -29,71 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Olap extends QueryModule {
 
-  /** Money-product sums: compute the product in DOUBLE (deterministic
-    * single-rounding per element in both engines), round it to a scale-6
-    * decimal (no double is ever exactly at a half-micro boundary — 5e-7
-    * is not dyadic — so both engines round identically), and sum exactly
-    * at scale 6. Crucially NOT decimal×decimal products: their scale-12
-    * sums exceed 2^53 micro²-units, where DuckDB's two-step int128→
-    * double conversion double-rounds and diverges from Spark's correctly
-    * rounded BigDecimal.doubleValue by 1 ulp. Scale-6 sums stay under
-    * 2^53 micro-units at every fixture SF → exact conversion both sides. */
-
-  /** A7 — the grouped form of the per-key request pattern. */
-  private def a7(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).orders
-      .groupBy($"o_custkey")
-      .agg(count(lit(1)).as("n_orders"), dsum0($"o_totalprice").as("total_spend"))
-      .orderBy($"o_custkey")
-  }
-
-  /** Rollup over (returnflag, linestatus) — subtotal lattice prefixes. */
-  private def rollupQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).lineitem
-      .rollup($"l_returnflag", $"l_linestatus")
-      .agg(count(lit(1)).as("n"), dsum0($"l_quantity").as("sum_qty"))
-      .orderBy($"l_returnflag".asc_nulls_first, $"l_linestatus".asc_nulls_first)
-  }
-
-  /** Cube over (status, priority) — full subtotal lattice. */
-  private def cubeQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).orders
-      .cube($"o_orderstatus", $"o_orderpriority")
-      .agg(count(lit(1)).as("n"), dsum0($"o_totalprice").as("sum_price"))
-      .orderBy($"o_orderstatus".asc_nulls_first, $"o_orderpriority".asc_nulls_first)
-  }
-
-  /** GROUPING SETS via the engine's SQL surface (temp-view catalog). */
-  private def gsets(spark: SparkSession, dir: String): DataFrame = {
-    Tables(spark, dir).registerAll()
-    spark.sql(
-      """SELECT l_returnflag, l_linestatus, count(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
-  }
-
-  /** DISTINCT projection. */
-  private def distinctQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).lineitem
-      .select($"l_returnflag", $"l_linestatus").distinct()
-      .orderBy($"l_returnflag", $"l_linestatus")
-  }
-
-  /** Exact count-distinct per group. */
-  private def countDistinctQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).lineitem
-      .groupBy($"l_returnflag")
-      .agg(countDistinct($"l_suppkey").as("n_suppliers"),
-        count(lit(1)).as("n_items"))
-      .orderBy($"l_returnflag")
-  }
-
   /** Approximate distinct (HLL++) — the 100 TB path. The sketch itself
     * is engine-internal, so the catalog row CERTIFIES it instead of
     * exposing it: the exact per-group count (oracle-able) rides along
@@ -182,29 +117,6 @@ object Olap extends QueryModule {
       .orderBy($"wk")
   }
 
-  /** Boolean aggregates (every/any per group). */
-  private def boolAggQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).lineitem
-      .groupBy($"l_returnflag")
-      .agg(
-        bool_and($"l_quantity" > 0).as("all_positive_qty"),
-        bool_or($"l_discount" > 0.05).as("any_big_discount"),
-        count(lit(1)).as("n"))
-      .orderBy($"l_returnflag")
-  }
-
-  /** Ordered string aggregation — collect_list is unordered by contract,
-    * so sort_array before joining: deterministic at any parallelism. */
-  private def stringAggQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).lineitem
-      .groupBy($"l_returnflag")
-      .agg(array_join(sort_array(array_distinct(collect_list($"l_linestatus"))), ",")
-        .as("statuses"))
-      .orderBy($"l_returnflag")
-  }
-
   /** Approximate percentiles — the 100 TB companion to
     * `olap_percentiles`: mergeable KLL-style sketches, no per-group
     * sort. The sketch output is engine-internal, so the catalog row is
@@ -242,101 +154,6 @@ object Olap extends QueryModule {
       .orderBy($"l_returnflag")
   }
 
-  /** UNION (distinct), INTERSECT, EXCEPT in one expression tree. */
-  private def setUnion(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.customer.filter($"c_mktsegment" === "BUILDING").select($"c_custkey".as("custkey"))
-      .union(t.orders.filter($"o_orderstatus" === "P").select($"o_custkey".as("custkey")))
-      .distinct()
-      .orderBy($"custkey")
-  }
-
-  private def setIntersect(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.customer.filter($"c_mktsegment" === "BUILDING").select($"c_custkey".as("custkey"))
-      .intersect(t.orders.select($"o_custkey".as("custkey")))
-      .orderBy($"custkey")
-  }
-
-  private def setExcept(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.customer.filter($"c_mktsegment" === "BUILDING").select($"c_custkey".as("custkey"))
-      .except(t.orders.select($"o_custkey".as("custkey")))
-      .orderBy($"custkey")
-  }
-
-  /** TPC-H Q1 — pricing summary report, on INTEGER-QUANTIZED moments
-    * (the olap_corr discipline): all four measure columns are exact
-    * 2-decimal values, so floor(v·100 + 0.5) BIGINT units make every
-    * sum a plain long sum and every product an exact integer product
-    * (price·(100−disc) in 1e-4 units, ·(100+tax) in 1e-6 units) — one
-    * map-combined hash aggregate at long-sum speed, where the previous
-    * decimal-sum form measured 1.7 s at sf0.1 (this form ~0.4 s). The
-    * per-group tail converts each BIGINT sum to double once (correctly
-    * rounded in both engines) and divides by the power-of-ten scale —
-    * fixed IEEE shapes, bit-identical cross-engine. Charge sums reach
-    * ~2e16 at sf0.1 (~2e17 at the 10× probe): BIGINT headroom to
-    * ~5e18; a 10¹²-row deployment limb-splits the charge sum exactly
-    * like olap_corr's Σy². */
-  private def q1(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val qq = floor($"l_quantity" * 100 + 0.5).cast("long")
-    val pq = floor($"l_extendedprice" * 100 + 0.5).cast("long")
-    val dq = floor($"l_discount" * 100 + 0.5).cast("long")
-    val tq = floor($"l_tax" * 100 + 0.5).cast("long")
-    Tables(spark, dir).lineitem
-      .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
-      .select($"l_returnflag", $"l_linestatus",
-        qq.as("qq"), pq.as("pq"), dq.as("dq"), tq.as("tq"))
-      .groupBy($"l_returnflag", $"l_linestatus")
-      .agg(sum($"qq").as("sq"), sum($"pq").as("sp"),
-        sum($"pq" * (lit(100L) - $"dq")).as("sdp"),
-        sum($"pq" * (lit(100L) - $"dq") * (lit(100L) + $"tq")).as("sch"),
-        sum($"dq").as("sd"),
-        count(lit(1)).as("count_order"))
-      .select($"l_returnflag", $"l_linestatus",
-        ($"sq".cast("double") / 100.0).as("sum_qty"),
-        ($"sp".cast("double") / 100.0).as("sum_base_price"),
-        ($"sdp".cast("double") / 10000.0).as("sum_disc_price"),
-        ($"sch".cast("double") / 1000000.0).as("sum_charge"),
-        ($"sq".cast("double") / 100.0 / $"count_order").as("avg_qty"),
-        ($"sp".cast("double") / 100.0 / $"count_order").as("avg_price"),
-        ($"sd".cast("double") / 100.0 / $"count_order").as("avg_disc"),
-        $"count_order")
-      .orderBy($"l_returnflag", $"l_linestatus")
-  }
-
-  /** TPC-H Q3 — shipping-priority top-10: join customer⋈orders⋈lineitem,
-    * grouped revenue, TakeOrderedAndProject on the aggregate. */
-  private def q3(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    val cutoff = lit("1996-03-15").cast("timestamp")
-    t.customer.filter($"c_mktsegment" === "BUILDING")
-      .join(t.orders, $"c_custkey" === $"o_custkey")
-      .filter($"o_orderdate" < cutoff)
-      .join(t.lineitem, $"o_orderkey" === $"l_orderkey")
-      .filter($"l_shipdate" > cutoff)
-      .groupBy($"l_orderkey", $"o_orderdate", $"o_orderpriority")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
-      .orderBy($"revenue".desc, $"o_orderdate", $"l_orderkey")
-      .limit(10)
-  }
-
-  /** TPC-H Q6 — forecast revenue change: tight filter + one exact sum. */
-  private def q6(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).lineitem
-      .filter($"l_shipdate" >= lit("1996-01-01").cast("timestamp")
-        && $"l_shipdate" < lit("1997-01-01").cast("timestamp")
-        && $"l_discount" >= 0.05 && $"l_discount" <= 0.07
-        && $"l_quantity" < 24)
-      .agg(dsum0($"l_extendedprice" * $"l_discount").as("revenue"))
-  }
-
   /** PIVOT — wide-form conditional aggregation (explicit value list:
     * deterministic output schema, and Spark skips the extra
     * distinct-values job — the right call at scale). */
@@ -357,32 +174,6 @@ object Olap extends QueryModule {
       .unpivot(Array($"c_custkey"), Array($"c_acctbal", $"c_nationkey".cast("double").as("c_nationkey")),
         "metric", "value")
       .orderBy($"c_custkey", $"metric")
-  }
-
-  /** Scalar + correlated subqueries via the SQL surface. */
-  private def scalarSubQ(spark: SparkSession, dir: String): DataFrame = {
-    Tables(spark, dir).registerAll()
-    spark.sql(
-      s"""SELECT o_orderkey, o_totalprice
-         |FROM orders
-         |WHERE o_totalprice > 2 * (SELECT ${sqlDavg("o_totalprice")} FROM orders)
-         |ORDER BY o_orderkey""".stripMargin)
-  }
-
-  /** Equi-width histogram by explicit bucket arithmetic (floor of a
-    * double division — the same IEEE ops on the same inputs in both
-    * engines, so bucket assignment is bit-deterministic; no reliance on
-    * a width_bucket builtin). One hash aggregate; at scale this is the
-    * map-combined histogram every profiler runs on a 100 TB column. */
-  private def histogramQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val bucket = floor($"o_totalprice" / 25000.0).cast("long")
-    Tables(spark, dir).orders
-      .groupBy(bucket.as("bucket"))
-      .agg(count(lit(1)).as("n_orders"),
-        min($"o_totalprice").as("lo"),
-        max($"o_totalprice").as("hi"))
-      .orderBy($"bucket")
   }
 
   /** NTILE bucketing — per-segment account-balance quartiles, then
@@ -408,12 +199,12 @@ object Olap extends QueryModule {
       .orderBy($"c_mktsegment", $"quartile")
   }
 
-  /** Pearson correlation per group — the column-profiling statistic —
-    * computed from EXACT integer moments rather than the builtin
-    * `corr`, whose one-pass float accumulation is partition-order-
-    * dependent and engine-divergent. Inputs quantize to 1e-2 units
-    * (floor(v·100 + 0.5) — both columns are 2-decimal money/quantity
-    * values, verified exact) and the six moments (n, Σx, Σy, Σx²,
+  /** Per-group moments for olap_regr (olap_corr's text spells the same
+    * moments, `sqlQmomentsCte`): EXACT integer moments rather than the
+    * builtin `corr`/`regr_*`, whose one-pass float accumulation is
+    * partition-order-dependent and engine-divergent. Inputs quantize
+    * to 1e-2 units (floor(v·100 + 0.5) — both columns are 2-decimal
+    * money/quantity values, verified exact) and the six moments (n, Σx, Σy, Σx²,
     * Σy², Σxy) accumulate as plain BIGINT sums in ONE map-combined
     * pass. Σy² alone would overflow BIGINT (yq² ≤ 1.2e14 × corpus),
     * so it accumulates as TWO limbs — Σ(yq² div 10⁶) and Σ(yq² %
@@ -484,21 +275,9 @@ object Olap extends QueryModule {
       col("sy").cast("double").as("syd"))
   }
 
-  private def corrQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    qdeltas(qmoments(spark, dir))
-      .select($"l_returnflag", $"n",
-        // Degenerate-group guard (e10's discipline): a singleton or
-        // constant-valued group has zero variance → NULL, matching the
-        // builtin corr's semantics instead of emitting NaN.
-        when($"dxx" =!= 0.0 && $"dyy" =!= 0.0,
-          round($"dxy" / sqrt($"dxx" * $"dyy"), 9)).as("corr_qty_price"))
-      .orderBy($"l_returnflag")
-  }
-
   /** Least-squares regression per group (slope, intercept, R²) —
     * y = l_extendedprice on x = l_quantity — from the same exact
-    * integer moments as `corrQ` (the builtin regr_* family shares
+    * integer moments as olap_corr (the builtin regr_* family shares
     * corr's engine-divergent float accumulation). One map-combined
     * pass of long sums; ratios are fixed-order IEEE ops rounded to 9.
     * Quantization scale cancels in slope and r² (x and y scale by the
@@ -523,32 +302,6 @@ object Olap extends QueryModule {
           round9stable(($"dxy" * $"dxy") / ($"dxx" * $"dyy"))).as("r2"))
       .orderBy($"l_returnflag")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "olap_regr"             -> (regrQ _),
-    "olap_corr"             -> (corrQ _),
-    "olap_ntile_quartiles"  -> (ntileQ _),
-    "olap_histogram"        -> (histogramQ _),
-    "olap_pivot"            -> (pivotQ _),
-    "olap_unpivot"          -> (unpivotQ _),
-    "olap_scalar_subquery"  -> (scalarSubQ _),
-    "a7_grouped_agg"        -> (a7 _),
-    "olap_rollup"           -> (rollupQ _),
-    "olap_cube"             -> (cubeQ _),
-    "olap_grouping_sets"    -> (gsets _),
-    "olap_bool_aggregates"  -> (boolAggQ _),
-    "olap_string_agg"       -> (stringAggQ _),
-    "olap_approx_percentiles" -> (approxPctQ _),
-    "olap_distinct"         -> (distinctQ _),
-    "olap_count_distinct"   -> (countDistinctQ _),
-    "olap_approx_distinct"  -> (approxDistinctQ _),
-    "olap_sketch_rollup"    -> (sketchRollupQ _),
-    "set_union"             -> (setUnion _),
-    "set_intersect"         -> (setIntersect _),
-    "set_except"            -> (setExcept _),
-    "tpch_q1"               -> (q1 _),
-    "tpch_q3"               -> (q3 _),
-    "tpch_q6"               -> (q6 _))
 
   private val sumDiscPrice =
     sqlDsum("l_extendedprice * (1.0 - l_discount)")
@@ -728,9 +481,10 @@ object Olap extends QueryModule {
         |EXCEPT
         |SELECT o_custkey AS custkey FROM orders
         |ORDER BY custkey""".stripMargin,
-    // q1: the quantized-moment restatement (see the query scaladoc) —
-    // BIGINT sums of exact 1e-2/1e-4/1e-6-unit products, one double
-    // conversion per group at the tail. Shared dialect throughout.
+    // q1: the quantized-moment restatement — the four measures are exact
+    // 2-decimal values, so BIGINT sums of exact 1e-2/1e-4/1e-6-unit
+    // products replace decimal sums (~0.4 s against 1.7 s at sf0.1),
+    // with one double conversion per group at the tail.
     "tpch_q1" ->
       """WITH q AS (
         |  SELECT l_returnflag, l_linestatus,
@@ -776,4 +530,30 @@ object Olap extends QueryModule {
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount >= 0.05 AND l_discount <= 0.07
         |  AND l_quantity < 24""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "olap_regr"             -> (regrQ _),
+    "olap_corr"             -> SqlProgram(oracles("olap_corr")),
+    "olap_ntile_quartiles"  -> (ntileQ _),
+    "olap_histogram"        -> SqlProgram(oracles("olap_histogram")),
+    "olap_pivot"            -> (pivotQ _),
+    "olap_unpivot"          -> (unpivotQ _),
+    "olap_scalar_subquery"  -> SqlProgram(oracles("olap_scalar_subquery")),
+    "a7_grouped_agg"        -> SqlProgram(oracles("a7_grouped_agg")),
+    "olap_rollup"           -> SqlProgram(oracles("olap_rollup")),
+    "olap_cube"             -> SqlProgram(oracles("olap_cube")),
+    "olap_grouping_sets"    -> SqlProgram(oracles("olap_grouping_sets")),
+    "olap_bool_aggregates"  -> SqlProgram(oracles("olap_bool_aggregates")),
+    "olap_string_agg"       -> SqlProgram(oracles("olap_string_agg")),
+    "olap_approx_percentiles" -> (approxPctQ _),
+    "olap_distinct"         -> SqlProgram(oracles("olap_distinct")),
+    "olap_count_distinct"   -> SqlProgram(oracles("olap_count_distinct")),
+    "olap_approx_distinct"  -> (approxDistinctQ _),
+    "olap_sketch_rollup"    -> (sketchRollupQ _),
+    "set_union"             -> SqlProgram(oracles("set_union")),
+    "set_intersect"         -> SqlProgram(oracles("set_intersect")),
+    "set_except"            -> SqlProgram(oracles("set_except")),
+    "tpch_q1"               -> SqlProgram(oracles("tpch_q1")),
+    "tpch_q3"               -> SqlProgram(oracles("tpch_q3")),
+    "tpch_q6"               -> SqlProgram(oracles("tpch_q6")))
 }

@@ -119,22 +119,6 @@ object Scalars extends QueryModule {
       .orderBy($"o_orderkey")
   }
 
-  /** Aggregate null semantics on a literal relation: count(*) vs
-    * count(col), sums/avgs over all-null groups, null group keys —
-    * the exact edge set the reference papers over with `|| 0` (F10). */
-  private def nulls(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Seq[(Option[Int], Option[Double])](
-      (Some(1), Some(1.5)), (Some(1), None), (Some(2), None),
-      (None, Some(7.0)), (None, None))
-      .toDF("grp", "v")
-    t.groupBy($"grp")
-      .agg(count(lit(1)).as("n_rows"), count($"v").as("n_vals"),
-        coalesce(sum($"v"), lit(0.0)).as("sum_or_zero"),
-        avg($"v").as("avg_nullable"))
-      .orderBy($"grp".asc_nulls_first)
-  }
-
   /** x2 — CSV sink + source round-trip: supplier written as quoted
     * header CSV, re-read under the ORIGINAL schema (explicit schema on
     * read — never infer in a pipeline: inference costs an extra pass
@@ -434,22 +418,6 @@ object Scalars extends QueryModule {
       .orderBy($"l_orderkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f_array_suite"      -> (arraysSuite _),
-    "f_map_suite"        -> (maps _),
-    "x3_orc_roundtrip"   -> (orcRoundtrip _),
-    "x2_csv_roundtrip"   -> (csvRoundtrip _),
-    "f_scalar_suite"     -> (f _),
-    "f_string_suite"     -> (strings _),
-    "f_date_suite"       -> (dates _),
-    "f_null_semantics"   -> (nulls _),
-    "x4_text_roundtrip"  -> (textRoundtrip _),
-    "x7_xml_roundtrip"   -> (xmlRoundtrip _),
-    "x5_schema_evolution" -> (schemaEvolution _),
-    "x6_corrupt_tolerant" -> (corruptTolerant _),
-    "x8_variant_extract" -> (variantExtract _),
-    "x1_json_roundtrip"  -> (jsonRoundtrip _))
-
   val oracles: Map[String, String] = Map(
     // Arrays: list(… ORDER BY …) is DuckDB's ordered collect; every
     // elementwise op then mirrors Spark's over the same sorted list.
@@ -607,4 +575,20 @@ object Scalars extends QueryModule {
         |      FROM (VALUES (1, 1.5), (1, NULL), (2, NULL), (NULL, 7.0), (NULL, NULL))
         |           t(grp, v))
         |GROUP BY grp ORDER BY grp ASC NULLS FIRST""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "f_array_suite"      -> (arraysSuite _),
+    "f_map_suite"        -> (maps _),
+    "x3_orc_roundtrip"   -> (orcRoundtrip _),
+    "x2_csv_roundtrip"   -> (csvRoundtrip _),
+    "f_scalar_suite"     -> (f _),
+    "f_string_suite"     -> (strings _),
+    "f_date_suite"       -> (dates _),
+    "f_null_semantics"   -> SqlProgram(oracles("f_null_semantics")),
+    "x4_text_roundtrip"  -> (textRoundtrip _),
+    "x7_xml_roundtrip"   -> (xmlRoundtrip _),
+    "x5_schema_evolution" -> (schemaEvolution _),
+    "x6_corrupt_tolerant" -> (corruptTolerant _),
+    "x8_variant_extract" -> (variantExtract _),
+    "x1_json_roundtrip"  -> (jsonRoundtrip _))
 }

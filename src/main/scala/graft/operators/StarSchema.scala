@@ -25,76 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object StarSchema extends QueryModule {
 
-
-  /** TPC-H Q5-style: revenue by nation for one region-year, customer and
-    * supplier in the same nation. */
-  private def q5(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.region.filter($"r_name" === "ASIA")
-      .join(t.nation, $"n_regionkey" === $"r_regionkey")
-      .join(t.customer, $"c_nationkey" === $"n_nationkey")
-      .join(t.orders, $"o_custkey" === $"c_custkey")
-      .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp")
-        && $"o_orderdate" < lit("1997-01-01").cast("timestamp"))
-      .join(t.lineitem, $"l_orderkey" === $"o_orderkey")
-      .join(t.supplier, $"l_suppkey" === $"s_suppkey"
-        && $"s_nationkey" === $"n_nationkey")
-      .groupBy($"n_name")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
-      .orderBy($"revenue".desc, $"n_name")
-  }
-
-  /** TPC-H Q14-style: promo revenue share over part×lineitem for one
-    * month — a conditional-sum ratio over a broadcast join. */
-  private def q14(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    val joined = t.lineitem
-      .filter($"l_shipdate" >= lit("1996-03-01").cast("timestamp")
-        && $"l_shipdate" < lit("1996-04-01").cast("timestamp"))
-      .join(t.part, $"l_partkey" === $"p_partkey")
-    // Final ratio rounded to 9 decimals: engines may differ by 1 ulp in
-    // the decimal→double conversion of the sub-sums, and the division
-    // amplifies it; a rounded ratio is stable across engines.
-    joined.agg(
-      round(lit(100.0)
-        * dsum0(when($"p_type".startsWith("PROMO"),
-            $"l_extendedprice" * (lit(1.0) - $"l_discount")))
-        / dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 9)
-        .as("promo_revenue_pct"))
-  }
-
-  /** Supplier enrichment across nation — the reference's J3 chase shape
-    * on the remaining dimension chain. */
-  private def suppliers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.supplier
-      .join(t.nation, $"s_nationkey" === $"n_nationkey")
-      .join(t.region, $"n_regionkey" === $"r_regionkey")
-      .select($"s_suppkey", $"s_name", $"n_name".as("nation"), $"r_name".as("region"),
-        $"s_acctbal")
-      .orderBy($"s_suppkey")
-  }
-
-  /** TPC-H Q10-style: returned-item reporting — customers who returned
-    * goods, revenue lost, joined out to nation, top 20. */
-  private def q10(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.lineitem.filter($"l_returnflag" === "R")
-      .join(t.orders, $"l_orderkey" === $"o_orderkey")
-      .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp")
-        && $"o_orderdate" < lit("1996-04-01").cast("timestamp"))
-      .join(t.customer, $"o_custkey" === $"c_custkey")
-      .join(t.nation, $"c_nationkey" === $"n_nationkey")
-      .groupBy($"c_custkey", $"c_name", $"c_acctbal", $"n_name")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
-      .orderBy($"revenue".desc, $"c_custkey")
-      .limit(20)
-  }
-
   /** TPC-H Q4-style: order-priority checking — orders in a quarter with
     * at least one late-shipped lineitem (EXISTS → left-semi join with a
     * non-equi conjunct; Catalyst pushes the equi part into the hash join
@@ -112,20 +42,6 @@ object StarSchema extends QueryModule {
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("order_count"))
       .orderBy($"o_orderpriority")
-  }
-
-  /** Exact percentiles per group (median + p90). At 100 TB use
-    * approx_percentile — same query shape, sketch-mergeable, no
-    * per-group sort; the exact form is the oracle-checkable tier. */
-  private def percentiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).lineitem
-      .groupBy($"l_returnflag")
-      .agg(
-        expr("percentile(l_quantity, 0.5)").as("p50_qty"),
-        expr("percentile(l_quantity, 0.9)").as("p90_qty"),
-        count(lit(1)).as("n"))
-      .orderBy($"l_returnflag")
   }
 
   /** TPC-H Q7-style: volume shipping between two nations — customer in
@@ -184,24 +100,6 @@ object StarSchema extends QueryModule {
           / dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 9)
         .as("mkt_share"))
       .orderBy($"o_year")
-  }
-
-  /** TPC-H Q13-style: customer order-count distribution — LEFT join so
-    * zero-order customers land in the c_count=0 bucket (the classic
-    * outer-join-then-histogram shape; an inner join would silently drop
-    * them). The join predicate's non-urgent filter lives ON the join,
-    * not WHERE (a WHERE would turn the join inner). */
-  private def q13(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.customer
-      .join(t.orders.filter($"o_orderpriority" =!= "1-URGENT"),
-        $"c_custkey" === $"o_custkey", "left_outer")
-      .groupBy($"c_custkey")
-      .agg(count($"o_orderkey").as("c_count"))
-      .groupBy($"c_count")
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy($"custdist".desc, $"c_count".desc)
   }
 
   /** TPC-H Q15-style: top supplier(s) by quarter revenue — the
@@ -527,29 +425,6 @@ object StarSchema extends QueryModule {
       .orderBy($"l_returnflag")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tpch_q2"           -> (q2 _),
-    "tpch_q9"           -> (q9 _),
-    "tpch_q11"          -> (q11 _),
-    "tpch_q12"          -> (q12 _),
-    "tpch_q16"          -> (q16 _),
-    "tpch_q20"          -> (q20 _),
-    "tpch_q21"          -> (q21 _),
-    "tpch_q4"           -> (q4 _),
-    "tpch_q5"           -> (q5 _),
-    "tpch_q7"           -> (q7 _),
-    "tpch_q8"           -> (q8 _),
-    "tpch_q10"          -> (q10 _),
-    "tpch_q13"          -> (q13 _),
-    "tpch_q14"          -> (q14 _),
-    "tpch_q15"          -> (q15 _),
-    "tpch_q17"          -> (q17 _),
-    "tpch_q19"          -> (q19 _),
-    "tpch_q22"          -> (q22 _),
-    "olap_percentiles"  -> (percentiles _),
-    "dim_supplier_geo"  -> (suppliers _),
-    "skew_salted_agg"   -> (salted _))
-
   val oracles: Map[String, String] = Map(
     "tpch_q11" ->
       """WITH ps AS (
@@ -701,6 +576,8 @@ object StarSchema extends QueryModule {
         |       percentile_cont(0.9) WITHIN GROUP (ORDER BY l_quantity) AS p90_qty,
         |       count(*) AS n
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+    // q14: the ratio is rounded to 9 decimals, because the engines may
+    // differ by 1 ulp in the decimal→double conversion of the sub-sums.
     "tpch_q14" ->
       s"""SELECT round(100.0
          |  * ${sqlDsum0("CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1.0 - l_discount) END")}
@@ -805,4 +682,27 @@ object StarSchema extends QueryModule {
          |                  WHERE o_custkey = c_custkey
          |                    AND o_orderdate >= TIMESTAMP '1999-01-01')
          |GROUP BY 1 ORDER BY nation_group""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "tpch_q2"           -> (q2 _),
+    "tpch_q9"           -> (q9 _),
+    "tpch_q11"          -> (q11 _),
+    "tpch_q12"          -> (q12 _),
+    "tpch_q16"          -> (q16 _),
+    "tpch_q20"          -> (q20 _),
+    "tpch_q21"          -> (q21 _),
+    "tpch_q4"           -> (q4 _),
+    "tpch_q5"           -> SqlProgram(oracles("tpch_q5")),
+    "tpch_q7"           -> (q7 _),
+    "tpch_q8"           -> (q8 _),
+    "tpch_q10"          -> SqlProgram(oracles("tpch_q10")),
+    "tpch_q13"          -> SqlProgram(oracles("tpch_q13")),
+    "tpch_q14"          -> SqlProgram(oracles("tpch_q14")),
+    "tpch_q15"          -> (q15 _),
+    "tpch_q17"          -> (q17 _),
+    "tpch_q19"          -> (q19 _),
+    "tpch_q22"          -> (q22 _),
+    "olap_percentiles"  -> SqlProgram(oracles("olap_percentiles")),
+    "dim_supplier_geo"  -> SqlProgram(oracles("dim_supplier_geo")),
+    "skew_salted_agg"   -> (salted _))
 }

@@ -577,32 +577,6 @@ object TextAnalysis extends QueryModule {
       .orderBy($"lang")
   }
 
-  /** t10 — deterministic content-keyed train/val/test split (~80/10/10).
-    * The split key is a hash of the CONTENT, not the row id or a random()
-    * draw: the assignment is then (a) reproducible across reruns and
-    * engines with no seed plumbing, (b) stable under resharding /
-    * repartitioning / re-ingestion (row order never matters), and (c)
-    * leak-proof across exact duplicates — byte-identical docs land in
-    * the same split by construction, so train/test contamination via
-    * dup pairs is impossible at the exact tier. Buckets come from the
-    * first two hex chars of md5 (256 buckets, compared lexicographically
-    * — portable across engines); 'cc' = 204/256 ≈ 79.7%, 'e6' = 230/256
-    * ≈ 89.8%. Pure per-row map: no shuffle, runs at scan speed at any
-    * scale. (md5 here is a partitioner, not security.) */
-  private def t10(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val bucket = substring(md5($"text"), 1, 2)
-    // Plain sort on purpose (sortedOnce tried and reverted): one md5
-    // per row is a near-free kernel — re-running it for the sort's
-    // bounds sampling beat materializing the split table at both SFs.
-    Tables(spark, dir).documents
-      .select($"doc_id",
-        when(bucket < "cc", "train")
-          .when(bucket < "e6", "val")
-          .otherwise("test").as("split"))
-      .orderBy($"doc_id")
-  }
-
   /** t11 — per-source document cap (group-wise downsampling): keep at
     * most K=50 docs per source, chosen by deterministic hash order
     * (md5(text), doc_id tiebreak) rather than arrival order — the
@@ -948,11 +922,12 @@ object TextAnalysis extends QueryModule {
   /** t25's (doc_id, lowercased-[a-z]+ run) word stream as a COMPILED
     * closure (r13; the t4/t23/t29 class): `regexp_extract_all` is one
     * more NFA pass over the corpus where a char scan suffices. Scan
-    * semantics: lowercase first (JVM lowercasing, Locale.ROOT — on
-    * non-special-casing locales identical to Spark's `lower`; the
-    * equivalence spec compares against the expression form directly),
-    * then maximal ASCII `[a-z]` runs of the LOWERED string — surrogate
-    * code units can never sit in 'a'..'z', so charAt scanning is exact.
+    * semantics: lowercase first through Spark's own `lower` code path
+    * (`UTF8String.toLowerCase`, which lowercases a non-ASCII string with
+    * the JVM default locale; the equivalence spec runs under the default
+    * and a Turkish locale), then maximal ASCII `[a-z]` runs of the
+    * LOWERED string — surrogate code units can never sit in 'a'..'z',
+    * so charAt scanning is exact.
     * t24's one-per-session memoized trainer keeps the regex spelling
     * (builds once; result-identical by the same equivalence). */
   private[graft] def t25WordsKernelForTest(docs: DataFrame): DataFrame = {
@@ -962,7 +937,7 @@ object TextAnalysis extends QueryModule {
         it.flatMap { case (id, text) =>
           if (text == null) Iterator.empty
           else {
-            val s = text.toLowerCase(java.util.Locale.ROOT)
+            val s = org.apache.spark.unsafe.types.UTF8String.fromString(text).toLowerCase().toString
             new Iterator[(Long, String)] {
               private var i = 0
               private def skip(): Unit = {
@@ -1204,33 +1179,6 @@ object TextAnalysis extends QueryModule {
       .agg(sum($"s_r".cast("decimal(18,6)")).cast("double").as("score_r"),
         count(lit(1)).as("n_terms"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t30_bm25" -> (t30 _),
-    "t22_zipf_fit"        -> (t22 _),
-    "t23_bigram_logprob"  -> (t23 _),
-    "t24_bpe_merges"      -> (t24 _),
-    "t25_bpe_encode"      -> (t25 _),
-    "t21_quality_tiers"   -> (t21 _),
-    "t18_char_entropy"    -> (t18 _),
-    "t19_unigram_logprob" -> (t19 _),
-    "t20_heavy_hitters"   -> (t20 _),
-    "t10_train_split"     -> (t10 _),
-    "t11_source_cap"      -> (t11 _),
-    "pipe1_corpus_prep"   -> (pipe1 _),
-    "t13_repetition_ratio" -> (t13 _),
-    "t27_quality_rules"   -> (t27 _),
-    "t12_bigram_top"      -> (t12 _),
-    "t9_tfidf_top_terms"  -> (t9 _),
-    "t8_text_scrub"       -> (t8 _),
-    "t7_stratified_sample" -> (t7 _),
-    "t1_token_counts"     -> (t1 _),
-    "t2_quality_score"    -> (t2 _),
-    "t3_language_id"      -> (t3 _),
-    "t4_fingerprint"      -> (t4 _),
-    "t5_quality_filter"   -> (t5 _),
-    "t5b_quality_filter_approx" -> (t5b _),
-    "t6_corpus_stats"     -> (t6 _))
 
   private val wordsSql =
     "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
@@ -1528,6 +1476,7 @@ object TextAnalysis extends QueryModule {
          |  FROM toks WHERE len(w) >= 2)
          |SELECT bigram, count(*) AS n FROM bi
          |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
+    // t10 — split keyed by md5(text): reproducible, and exact duplicates share a split.
     "t10_train_split" ->
       """SELECT doc_id,
         |       CASE WHEN substr(md5(text), 1, 2) < 'cc' THEN 'train'
@@ -1690,4 +1639,31 @@ object TextAnalysis extends QueryModule {
          |    / (SELECT count(*) FROM documents), 6) AS mean_tokens_per_doc,
          |  (SELECT count(DISTINCT w) FROM
          |    (SELECT unnest($wordsSql) AS w FROM documents)) AS vocab_size""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "t30_bm25" -> (t30 _),
+    "t22_zipf_fit"        -> (t22 _),
+    "t23_bigram_logprob"  -> (t23 _),
+    "t24_bpe_merges"      -> (t24 _),
+    "t25_bpe_encode"      -> (t25 _),
+    "t21_quality_tiers"   -> (t21 _),
+    "t18_char_entropy"    -> (t18 _),
+    "t19_unigram_logprob" -> (t19 _),
+    "t20_heavy_hitters"   -> (t20 _),
+    "t10_train_split"     -> SqlProgram(oracles("t10_train_split")),
+    "t11_source_cap"      -> (t11 _),
+    "pipe1_corpus_prep"   -> (pipe1 _),
+    "t13_repetition_ratio" -> (t13 _),
+    "t27_quality_rules"   -> (t27 _),
+    "t12_bigram_top"      -> (t12 _),
+    "t9_tfidf_top_terms"  -> (t9 _),
+    "t8_text_scrub"       -> (t8 _),
+    "t7_stratified_sample" -> (t7 _),
+    "t1_token_counts"     -> (t1 _),
+    "t2_quality_score"    -> (t2 _),
+    "t3_language_id"      -> (t3 _),
+    "t4_fingerprint"      -> (t4 _),
+    "t5_quality_filter"   -> (t5 _),
+    "t5b_quality_filter_approx" -> (t5b _),
+    "t6_corpus_stats"     -> (t6 _))
 }

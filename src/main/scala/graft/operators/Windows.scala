@@ -114,31 +114,6 @@ object Windows extends QueryModule {
       .orderBy($"o_orderdate")
   }
 
-  /** The remaining window functions: distribution ranks (percent_rank,
-    * cume_dist — single IEEE divisions of small integers, identical
-    * across engines) and positional values over the FULL-partition
-    * frame (first/last/nth — the default growing frame makes
-    * last_value a no-op, so the frame is explicit). The order key
-    * (date, orderkey) is unique per partition → no tie ambiguity;
-    * single-order customers pin the edge cases (percent_rank = 0,
-    * nth_value(…, 2) = NULL) identically in both engines. */
-  private def suite2(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val byCust = Window.partitionBy($"o_custkey")
-      .orderBy($"o_orderdate", $"o_orderkey")
-    val full = byCust.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables(spark, dir).orders
-      .filter($"o_custkey" < 200L)
-      .select($"o_custkey", $"o_orderkey",
-        percent_rank().over(byCust).as("pct_rank"),
-        cume_dist().over(byCust).as("cume"),
-        first($"o_orderkey").over(full).as("first_order"),
-        last($"o_orderkey").over(full).as("last_order"),
-        nth_value($"o_orderkey", 2).over(full).as("second_order"))
-      .orderBy($"o_custkey", $"o_orderkey")
-  }
-
   /** Gap filling over a CALENDAR SPINE — the time-series completion
     * every reporting layer runs before charting or model features:
     * generate the full day range (sequence over the aggregated min/max
@@ -168,14 +143,6 @@ object Windows extends QueryModule {
           .cast("double").as("rev_ffill"))
       .orderBy($"day")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "olap_gap_fill"            -> (gapFill _),
-    "olap_window_suite2"       -> (suite2 _),
-    "olap_rolling_range"       -> (rollingRange _),
-    "olap_window_suite"        -> (suite _),
-    "olap_grouped_topk_udaf"   -> (groupedTopK _),
-    "tpch_q18"                 -> (q18 _))
 
   val oracles: Map[String, String] = Map(
     // DuckDB spells the ignore-nulls fill as last_value(x IGNORE NULLS)
@@ -265,4 +232,12 @@ object Windows extends QueryModule {
          |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
          |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
          |LIMIT 100""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "olap_gap_fill"            -> (gapFill _),
+    "olap_window_suite2"       -> SqlProgram(oracles("olap_window_suite2")),
+    "olap_rolling_range"       -> (rollingRange _),
+    "olap_window_suite"        -> (suite _),
+    "olap_grouped_topk_udaf"   -> (groupedTopK _),
+    "tpch_q18"                 -> (q18 _))
 }

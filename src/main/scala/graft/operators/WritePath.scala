@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * transformation over immutable inputs — same observable end state,
   * stronger consistency:
   *
-  *   - W1 insert defaults → derived columns (`when/otherwise`).
+  *   - W1 insert defaults → derived columns (CASE WHEN).
   *   - W2 `$set` by key    → masked column rewrite.
   *   - W3 `$inc` ledger    → balance = base + credits − debits aggregated
   *     over the full event log in one pass (the analytic restatement of
@@ -28,49 +28,6 @@ import org.apache.spark.sql.functions._
   * at 100 TB are partitioned parquet writes, not row upserts.
   */
 object WritePath extends QueryModule {
-
-  /** W1/F7 — role-based server defaults (coins: buyer→50, worker→10,
-    * index.js:393). */
-  private def w1(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).customer
-      .select($"c_custkey",
-        when($"c_mktsegment" === "BUILDING", 50).otherwise(10).as("coins"))
-      .orderBy($"c_custkey")
-  }
-
-  /** W2 — `$set {status}` by key (index.js:828-831) as a masked rewrite;
-    * every row flows through, only the keyed row changes. */
-  private def w2(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).orders
-      .select($"o_orderkey",
-        when($"o_orderkey" === 7L, "approved").otherwise($"o_orderstatus")
-          .as("status"))
-      .orderBy($"o_orderkey")
-  }
-
-  /** W3 — the `$inc` coin ledger restated: balance = base + credits −
-    * debits over the whole event log, one grouped pass. */
-  private def w3(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).events
-      .groupBy($"user_id")
-      .agg((lit(10.0)
-        + dsum0(when($"event_type" === "purchase", $"value"))
-        - dsum0(when($"event_type" === "error", $"value"))).as("coins"))
-      .orderBy($"user_id")
-  }
-
-  /** W4 — delete-by-key (index.js:250,700,1128) as a negated-key filter;
-    * the set-valued form is a left-anti join on the tombstone set. */
-  private def w4(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir).events
-      .filter(!$"event_id".isin(1L, 2L, 3L))
-      .select($"event_id", $"event_type")
-      .orderBy($"event_id")
-  }
 
   /** W5 — guarded approval capacity rule (index.js:816-822): the first k
     * submissions per task by submit time are approved; rank via a window
@@ -537,22 +494,6 @@ object WritePath extends QueryModule {
     foldRollup(rollupBase(spark, dir),
       rollupContrib(rollupDeltaFeed(spark, dir)))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "w15_expectations"     -> (w15 _),
-    "w14_dynamic_overwrite" -> (w14 _),
-    "w13_time_travel"      -> (w13 _),
-    "w12_incremental_rollup" -> (w12 _),
-    "w11_cdc_apply"        -> (w11 _),
-    "w10_zorder_cluster"   -> (w10 _),
-    "w9_compaction"        -> (w9 _),
-    "w8_merge_upsert"      -> (w8 _),
-    "w7_partitioned_write" -> (w7 _),
-    "w1_insert_defaults" -> (w1 _),
-    "w2_masked_update"   -> (w2 _),
-    "w3_balance_ledger"  -> (w3 _),
-    "w4_delete_rewrite"  -> (w4 _),
-    "w5_capacity_rule"   -> (w5 _))
-
   val oracles: Map[String, String] = Map(
     // w9: the content invariants (row count, exact decimal price sum)
     // are recomputed by the oracle from the source table — the rewrite
@@ -696,19 +637,23 @@ object WritePath extends QueryModule {
       """SELECT lang, count(*) AS n_docs,
         |       CAST(sum(n_chars) AS BIGINT) AS total_chars
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+    // W1/F7 — role-based server defaults (coins: buyer→50, worker→10, index.js:393).
     "w1_insert_defaults" ->
       """SELECT c_custkey,
         |       CASE WHEN c_mktsegment = 'BUILDING' THEN 50 ELSE 10 END AS coins
         |FROM customer ORDER BY c_custkey""".stripMargin,
+    // W2 — `$set {status}` by key (index.js:828-831) as a masked rewrite.
     "w2_masked_update" ->
       """SELECT o_orderkey,
         |       CASE WHEN o_orderkey = 7 THEN 'approved' ELSE o_orderstatus END AS status
         |FROM orders ORDER BY o_orderkey""".stripMargin,
+    // W3 — the `$inc` coin ledger: base + credits − debits in one grouped pass.
     "w3_balance_ledger" ->
       s"""SELECT user_id,
          |       10.0 + ${sqlDsum0("CASE WHEN event_type = 'purchase' THEN value END")}
          |            - ${sqlDsum0("CASE WHEN event_type = 'error' THEN value END")} AS coins
          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+    // W4 — delete-by-key (index.js:250,700,1128) as a negated-key filter.
     "w4_delete_rewrite" ->
       """SELECT event_id, event_type FROM events
         |WHERE event_id NOT IN (1, 2, 3) ORDER BY event_id""".stripMargin,
@@ -721,4 +666,20 @@ object WritePath extends QueryModule {
         |  FROM lineitem)
         |WHERE rn <= 3
         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "w15_expectations"     -> (w15 _),
+    "w14_dynamic_overwrite" -> (w14 _),
+    "w13_time_travel"      -> (w13 _),
+    "w12_incremental_rollup" -> (w12 _),
+    "w11_cdc_apply"        -> (w11 _),
+    "w10_zorder_cluster"   -> (w10 _),
+    "w9_compaction"        -> (w9 _),
+    "w8_merge_upsert"      -> (w8 _),
+    "w7_partitioned_write" -> (w7 _),
+    "w1_insert_defaults" -> SqlProgram(oracles("w1_insert_defaults")),
+    "w2_masked_update"   -> SqlProgram(oracles("w2_masked_update")),
+    "w3_balance_ledger"  -> SqlProgram(oracles("w3_balance_ledger")),
+    "w4_delete_rewrite"  -> SqlProgram(oracles("w4_delete_rewrite")),
+    "w5_capacity_rule"   -> (w5 _))
 }

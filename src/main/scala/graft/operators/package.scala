@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -19,6 +21,34 @@ import org.apache.spark.sql.types.DecimalType
   * hash aggregate (map-side combine), no extra shuffle.
   */
 package object operators {
+
+  /** A catalog program that is its oracle SQL text: where Catalyst
+    * compiles the text to the plan a DataFrame program would build, the
+    * text is the one program. Each fixture table the text names is bound
+    * to `Tables(spark, dir)`'s analyzed plan for it, in FROM clauses,
+    * CTE bodies and IN/EXISTS/scalar subqueries alike. No temp view is
+    * registered: a view is shared by everything on its session, and one
+    * session serves several fixture dirs and concurrent programs. The
+    * analyzed plan, not the unanalyzed one, so a raw parquet read is not
+    * resolved again (file listing and footer read) at every build. No
+    * SubqueryAlias named after the table wraps it (a qualified attribute
+    * keeps the planner from dropping an identity projection over a
+    * scan), so a text that qualifies a column gives its table a FROM
+    * alias (`FROM orders o`). */
+  final case class SqlProgram(text: String) extends ((SparkSession, String) => DataFrame) {
+    def apply(spark: SparkSession, dir: String): DataFrame = {
+      val tables = Tables(spark, dir)
+      def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+        case UnresolvedRelation(Seq(name), _, _) if Tables.names.contains(name) =>
+          tables.table(name).queryExecution.analyzed
+        case w: UnresolvedWith =>
+          w.copy(cteRelations = w.cteRelations.map { case (n, q, depth) =>
+            (n, bind(q).asInstanceOf[SubqueryAlias], depth)
+          })
+      }
+      GraftColumns.ofRows(spark, bind(spark.sessionState.sqlParser.parsePlan(text)))
+    }
+  }
 
   /** Exact sum of a double column — `cast(sum(cast(c as decimal(18,6))) as double)`. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast("double")

@@ -1,5 +1,9 @@
 package graft
 
+import graft.operators.SqlProgram
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The catalog's oracle SQL is written ONCE in the shared Spark∩DuckDB
@@ -7,10 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * (sha256, len-on-arrays, list_filter/list_transform, range, unnest,
   * epoch_us, quantile_cont, ... — see `DialectCompat`), the
   * `SparkEntry.sqlPortable` oracle texts run VERBATIM on Spark SQL
-  * (197 as of the round-8 fifth session). This spec executes each via
+  * (the first test states how many). This spec executes each via
   * spark.sql over the temp-view catalog and requires row-for-row
-  * equality with the DataFrame program: one query text, three engines
-  * (Spark DataFrame, Spark SQL, DuckDB), one result.
+  * equality with the catalog program: one query text, three engines
+  * (the catalog program, Spark SQL, DuckDB), one result.
+  *
+  * It also keeps one program per query. A catalog entry is either a
+  * DataFrame program or its oracle text served through `SqlProgram`.
+  * A DataFrame program must NOT be plan-equal to its text under
+  * `SqlProgram` (a `sameResult`-equal optimized plan and the same
+  * physical operator sequence): such a program only repeats the text
+  * and should be replaced by it. tpch_q17 needs no exemption: its
+  * DataFrame program broadcasts the per-part threshold by hand, and its
+  * text plans a sort-merge join there before adaptive execution. A `SqlProgram` entry must serve the
+  * oracle text itself, with no backslash (the parity profile's
+  * escaped-literal parsing does not hold for catalog runs) and no CTE
+  * named after a fixture table (`SqlProgram` binds fixture names, so
+  * such a CTE would be bypassed).
   *
   * `spark.sql.parser.escapedStringLiterals=true` is part of the parity
   * profile: the warehouse dialect treats backslashes in string literals
@@ -77,7 +94,21 @@ class SqlParitySpec extends AnyFunSuite {
   test(s"parity surface covers ${portable.size} oracle texts") {
     assert(portable.size >= 150, s"parity surface shrank to ${portable.size}")
     assert(portable.toSet.subsetOf(SparkEntry.oracleSql.keySet))
+    val sqlPrograms = SparkEntry.queries.collect { case (n, _: SqlProgram) => n }.toSet
+    assert(sqlPrograms.subsetOf(portable.toSet), sqlPrograms -- portable)
   }
+
+  /** Same optimized plan up to expression ids, and the same physical
+    * operator sequence before adaptive execution. */
+  private def planEqual(a: DataFrame, b: DataFrame): Boolean = {
+    def ops(d: DataFrame) = d.queryExecution.sparkPlan.collect { case p => p.nodeName }
+    a.queryExecution.optimizedPlan.sameResult(b.queryExecution.optimizedPlan) && ops(a) == ops(b)
+  }
+
+  private def cteNames(plan: LogicalPlan): Seq[String] =
+    plan.collectWithSubqueries { case w: UnresolvedWith =>
+      w.cteRelations.flatMap { case (n, q, _) => n +: cteNames(q) }
+    }.flatten
 
   portable.foreach { name =>
     test(s"$name: oracle SQL runs verbatim on Spark SQL with identical results") {
@@ -85,11 +116,39 @@ class SqlParitySpec extends AnyFunSuite {
       val prev = spark.conf.get("spark.sql.parser.escapedStringLiterals")
       spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
       try {
-        val viaSql = spark.sql(SparkEntry.oracleSql(name)).collect().toSeq
-        val viaDf = SparkEntry.queries(name)(spark, dir).collect().toSeq
+        val text = SparkEntry.oracleSql(name)
+        val viaSql = spark.sql(text).collect().toSeq
+        val program = SparkEntry.queries(name)
+        val df = program(spark, dir)
+        val viaDf = df.collect().toSeq
         assert(viaSql.map(_.toSeq) == viaDf.map(_.toSeq),
-          s"$name: Spark SQL result differs from DataFrame result")
+          s"$name: Spark SQL result differs from the catalog program's result")
+        program match {
+          case p: SqlProgram =>
+            assert(p.text eq text, s"$name: serves a copy of its oracle text")
+            assert(!text.contains('\\'), s"$name: text has a backslash")
+            val shadowing = cteNames(spark.sessionState.sqlParser.parsePlan(text)).filter(Tables.names.contains)
+            assert(shadowing.isEmpty, s"$name: CTEs named after fixture tables: $shadowing")
+          case _ =>
+            assert(!planEqual(df, SqlProgram(text)(spark, dir)),
+              s"$name: the DataFrame program plans like its oracle text; serve the text through SqlProgram")
+        }
       } finally spark.conf.set("spark.sql.parser.escapedStringLiterals", prev)
     }
+  }
+
+  test("SqlProgram binds the fixtures of the dir it is given and registers no temp view") {
+    val s = spark.newSession()
+    val program = SparkEntry.queries("p4_filter_scan")
+    assert(program.isInstanceOf[SqlProgram])
+    val results = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").map { d =>
+      val got = program(s, d).collect().toSeq
+      val expected = Tables(s, d).orders.filter(col("o_orderstatus") === "O")
+        .select("o_orderkey", "o_custkey", "o_totalprice").orderBy("o_orderkey").collect().toSeq
+      assert(got == expected, s"p4_filter_scan over $d")
+      got
+    }
+    assert(results(0) != results(1), "the two dirs must give different rows")
+    assert(s.catalog.listTables().collect().filter(_.isTemporary).isEmpty)
   }
 }

@@ -265,10 +265,10 @@ class StateStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val wal = Scratch.tempDir("wal_compact") + "/ops.wal"
     val a = new StateStore(spark, dir, autoCompactAt = 4, walPath = Some(wal))
-    // 6 upserts under mutate(): the 5th crosses the threshold and folds
+    // 6 upserts under mutateOn(): the 5th crosses the threshold and folds
     // the journal into a scratch base — which a NEW PROCESS cannot see.
     (1 to 6).foreach { i =>
-      a.mutate(a.notifications.upsert(Map("event_id" -> (800000L + i),
+      a.mutateOn(Seq("notifications"))(a.notifications.upsert(Map("event_id" -> (800000L + i),
         "event_type" -> "notification", "message" -> s"m$i")))
     }
     assert(a.notifications.journalSize <= 4, "threshold must have folded")
@@ -326,12 +326,12 @@ class StateStoreSpec extends AnyFunSuite {
     assert(rowsOf(d.tasks) == rowsOf(a.tasks),
       "a manifest-less snapshot remnant must be invisible to recovery")
 
-    // Auto-trigger: crossing walCheckpointEvery inside mutate()
+    // Auto-trigger: crossing walCheckpointEvery inside mutateOn()
     // checkpoints without anyone calling it.
     val root2 = Scratch.tempDir("wal_auto")
     val e = new StateStore(spark, dir, walPath = Some(root2 + "/ops.wal"),
       walCheckpointEvery = 5)
-    (1 to 6).foreach(i => e.mutate(
+    (1 to 6).foreach(i => e.mutateOn(Seq("notifications"))(
       e.notifications.upsert(Map("event_id" -> (810000L + i),
         "event_type" -> "notification"))))
     assert(StateStore.latestSnapshot(root2).isDefined,

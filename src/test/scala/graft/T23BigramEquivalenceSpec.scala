@@ -64,7 +64,11 @@ class T23BigramEquivalenceSpec extends AnyFunSuite {
         s"${(expected diff actual).take(3)}")
   }
 
-  test("t25 lowercase-letter-run closure equals regexp_extract_all(lower, '[a-z]+')") {
+  /** Spark's `lower` lowercases a string that holds a non-ASCII
+    * character with the JVM default locale, so the case runs under the
+    * default locale and again under Turkish, where `I` and `İ` lowercase
+    * differently (doc 940004). */
+  private def t25Case(): Unit = {
     import spark.implicits._
     val adversarial = Seq(
       940001L -> "", 940002L -> "ABC def GhI", 940003L -> "x1y2z3",
@@ -84,5 +88,16 @@ class T23BigramEquivalenceSpec extends AnyFunSuite {
     assert(actual == expected,
       s"word multiset divergence: ${(actual.toSet diff expected.toSet).take(3)} / " +
         s"${(expected.toSet diff actual.toSet).take(3)}")
+  }
+
+  test("t25 lowercase-letter-run closure equals regexp_extract_all(lower, '[a-z]+')") {
+    t25Case()
+  }
+
+  test("t25 closure equals regexp_extract_all(lower, '[a-z]+') under a Turkish default locale") {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try t25Case()
+    finally java.util.Locale.setDefault(prev)
   }
 }
