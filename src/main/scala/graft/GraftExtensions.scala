@@ -1,9 +1,11 @@
 package graft
 
-import graft.functions.{FloatDotProduct, ShingleHashArray, SortedLongIntersectCount}
+import graft.functions.{BoundLiteral, FloatDotProduct, ShingleHashArray, SortedLongIntersectCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, ExpressionInfo, In, Literal}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
 
 /** Library packaging for the engine's custom expressions: install via
   *
@@ -13,9 +15,14 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * Injected functions are session-bound builtins — available to SQL and
   * `call_function` alike, on every executor, with no per-query
   * registration. `VectorFunctions.register` remains as the programmatic
-  * fallback for sessions created without the conf. */
+  * fallback for sessions created without the conf. It also installs
+  * [[BindFilterLiterals]], the physical rule that keeps request values
+  * out of generated code. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = BindFilterLiterals
+    })
     ext.injectFunction((
       FunctionIdentifier("float_dot"),
       new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),
@@ -37,7 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Spark lacks, so catalog SQL written in the common warehouse dialect
     // (and the DuckDB oracle texts) runs verbatim on this engine. Each is
     // a pure rewrite to a builtin expression — codegen'd, no UDF tier.
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Sha2, UnixMicros, UnixSeconds}
+    import org.apache.spark.sql.catalyst.expressions.{Sha2, UnixMicros, UnixSeconds}
     def alias(name: String, build: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),
@@ -175,5 +182,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       case exprs => throw new IllegalArgumentException(
         s"encode expects 1 or 2 arguments, got ${exprs.length}")
     })
+  }
+}
+
+/** Physical rule: the primitive literals that a `FilterExec` compares
+  * against (a comparison operand, an IN list value) become
+  * [[BoundLiteral]]s, which generated code reads by reference. A serving
+  * read then compiles once per route, not once per request key: with the
+  * value inlined, each new `o_orderkey = <id>` would compile a new
+  * whole-stage class. It runs before whole-stage codegen, as a columnar
+  * pre-transition rule, because those rules also run on plans without an
+  * exchange, where adaptive execution's stage rules never run. The scan
+  * below the filter captured its pushed filters at planning time from
+  * the real literal, so parquet pushdown and row-group pruning are
+  * unchanged, and the bound value renders as the literal did, so plan
+  * strings are too. */
+object BindFilterLiterals extends Rule[SparkPlan] {
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case f: FilterExec =>
+      val bound = f.condition.transformUp {
+        case c: BinaryComparison => c.mapChildren(bind)
+        case in: In if in.list.exists(e => bind(e) ne e) => in.copy(list = in.list.map(bind))
+      }
+      if (bound eq f.condition) f else f.copy(condition = bound)
+  }
+
+  private def bind(e: Expression): Expression = e match {
+    case Literal(v, t) if v != null && BoundLiteral.inlined(t) => BoundLiteral(v, t)
+    case other => other
   }
 }

@@ -315,7 +315,10 @@ object RestServe {
     // (read-your-writes; with an empty journal current(where) IS the
     // same cached relation filtered, so plans and bytes match the
     // read-only façade). The filter goes INTO current(where), so the
-    // journal-key probe runs only on the rows it keeps.
+    // journal-key probe runs only on the rows it keeps. The request's
+    // value is bound by reference, not inlined into generated code
+    // (BindFilterLiterals; the journal side is filtered on the driver),
+    // so a read with a new id reuses the classes the last read compiled.
     def taskById(params: Map[String, String]): Option[DataFrame] =
       params.get("id").flatMap(_.toLongOption).map { id =>
         store.tasks.current($"o_orderkey" === id) // P2, index.js:1017-1029

@@ -8,7 +8,11 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.functions.{KeySet, KeySetProbe}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumns, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,7 +40,14 @@ import org.apache.spark.sql.types._
   *     inside the scan's stage — one pruned parquet pass, no broadcast
   *     job, no shuffle, no window over the corpus. A read's own filter
   *     goes into `current(where)`, below the key-set filter, so only
-  *     the rows it keeps are probed. When the journal is empty,
+  *     the rows it keeps are probed; the journal rows it keeps are
+  *     picked on the driver, and the union is skipped when there are
+  *     none. Request values are BOUND BY REFERENCE, never inlined into
+  *     generated code: the journal keys ride in `KeySetProbe`, a
+  *     filter's comparison values become `BoundLiteral`s
+  *     (`BindFilterLiterals`), and the journal side is tested by an
+  *     interpreted predicate. So a read with a new key reuses the
+  *     classes the last read compiled. When the journal is empty,
   *     `current()` returns the base RELATION ITSELF, so an unwritten
   *     entity plans and serves byte-identically to the read-only façade.
   *   - GUARD COUNTS ([[EntityState.countWhere]]) use the same key set:
@@ -790,8 +801,17 @@ final class EntityState(
     * agree even for direct (un-locked) concurrent callers; under
     * [[StateStore.mutateOn]] the hook only buffers (no IO held under
     * the monitor), and the direct path's commit takes only WAL-local
-    * locks — no cycle. */
-  def upsert(row: Map[String, Any]): Unit = fenced { doUpsert(row) }
+    * locks — no cycle. A row whose key column is null or absent is
+    * refused (IllegalArgumentException, the routes' 400): no key
+    * predicate could reach it again once compacted into the base. WAL
+    * replay does not pass through here, so a log written before this
+    * rule still recovers. */
+  def upsert(row: Map[String, Any]): Unit = fenced {
+    keyCols.find(c => row.get(c).forall(_ == null)).foreach { c =>
+      throw new IllegalArgumentException(s"key column $c is null or missing")
+    }
+    doUpsert(row)
+  }
 
   private def doUpsert(row: Map[String, Any]): Unit = synchronized {
     val known = allFields.map(f => f.name -> f.dataType).toMap
@@ -928,8 +948,8 @@ final class EntityState(
     * (identical object, identical plan — the read-only façade's
     * byte-equality contract is preserved by construction). Otherwise:
     * base without the journal keys (the shared key-set filter — bounded
-    * by auto-compaction) union journal rows, schema evolution
-    * null-filled. */
+    * by auto-compaction) union the live journal rows, schema evolution
+    * null-filled; with no live journal row, the base side alone. */
   def current(): DataFrame = merged(None)
 
   /** The rows of `current().filter(where)`, with `where` applied to the
@@ -937,7 +957,8 @@ final class EntityState(
     * into one conjunction, the first-applied filter's terms first, and
     * evaluates them in that order: after `current().filter(where)` the
     * key-set probe runs on every base row, here only on the rows
-    * `where` keeps. `where` reads base columns. */
+    * `where` keeps. The journal rows are tested against `where` on the
+    * driver ([[journalMatches]]). `where` reads base columns. */
   def current(where: Column): DataFrame = merged(Some(where))
 
   private def merged(where: Option[Column]): DataFrame = {
@@ -946,12 +967,29 @@ final class EntityState(
     if (snapKeys.isEmpty) base
     else {
       val schema = StructType(snapFields)
-      val delta = spark.createDataFrame(
-        snapRows.map(m => Row.fromSeq(schema.map(f => m.getOrElse(f.name, null)))).asJava,
-        schema)
-      withoutSuperseded(base, snapKeys)
-        .unionByName(where.fold(delta)(delta.filter), allowMissingColumns = true)
+      val delta = LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(schema),
+        snapRows.map(m => Row.fromSeq(schema.map(f => m.getOrElse(f.name, null)))))
+      val kept = where.fold(delta.data)(w => journalMatches(delta, w))
+      val rest = withoutSuperseded(base, snapKeys)
+      if (kept.nonEmpty)
+        rest.unionByName(GraftColumns.ofRows(spark, delta.copy(data = kept)), allowMissingColumns = true)
+      else // no journal row to add: the base side alone, its evolved columns null
+        rest.select(col("*") +: schema.filterNot(f => rest.columns.contains(f.name))
+          .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
     }
+  }
+
+  /** The journal rows `where` keeps, tested on the driver by an
+    * interpreted predicate. Handing `Filter(where, journal)` to the
+    * optimizer instead would compile a predicate class per request
+    * value: `ConvertToLocalRelation` code-generates the filter over a
+    * local relation, with the value inlined. */
+  private def journalMatches(delta: LocalRelation, where: Column): Seq[InternalRow] = {
+    val cond = GraftColumns.ofRows(spark, delta).filter(where).queryExecution.analyzed
+      .asInstanceOf[Filter].condition
+    val p = Predicate.createInterpreted(BindReferences.bindReference(cond, delta.output))
+    p.initialize(0)
+    delta.data.filter(p.eval)
   }
 
   /** Merged count of the rows equal to `where` on every named column —

@@ -352,7 +352,23 @@ object Graph extends QueryModule {
     * above); private[graft] so GraphSpec can assert the fixture bound. */
   private[graft] val DegCap = 256
   private val mutualMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Once[DataFrame]]()
+
+  /** A memo value built outside its map: `computeIfAbsent` only installs
+    * the holder, and the first `get` builds under the holder's own lock.
+    * So the build's eager job ([[cappedPairs]]' max-degree probe) never
+    * runs while it holds a bin lock of the map, and concurrent first
+    * callers still share one build. A failed build leaves the holder
+    * empty, and the next `get` retries it. */
+  private final class Once[A](build: () => A) {
+    @volatile private var value: Option[A] = None
+    def built: Option[A] = value
+    def get: A = value.getOrElse(synchronized {
+      if (value.isEmpty) value = Some(build())
+      value.get
+    })
+  }
+
   /** The mega-hub degree cap, made RUNTIME-ADAPTIVE (r13; the d7/d14
     * count-then-pick discipline): top-DegCap supplier links per customer
     * (n desc, sk — total order) bound the pair expansion at C(DegCap,2)
@@ -380,8 +396,8 @@ object Graph extends QueryModule {
 
   private[graft] def mutualKnn(spark: SparkSession, dir: String): DataFrame = {
     val app = spark.sparkContext.applicationId
-    evictOtherDirs(mutualMemo, app, dir)(Seq(_))
-    mutualMemo.computeIfAbsent((app, dir), _ => {
+    evictOtherDirs(mutualMemo, app, dir)(_.built.toSeq)
+    mutualMemo.computeIfAbsent((app, dir), _ => new Once(() => {
       import spark.implicits._
       import org.apache.spark.sql.expressions.Window
       val (pairs, _, _) = graphFrames(spark, dir)
@@ -400,7 +416,7 @@ object Graph extends QueryModule {
           .select(least($"s", $"t").as("a"), greatest($"s", $"t").as("b"))
           .groupBy($"a", $"b").agg(count(lit(1)).as("c"))
           .filter($"c" === 2).select($"a", $"b"))
-    })
+    })).get
   }
 
   /** g5 — hop-bounded CHEAPEST path (min-plus / Bellman-Ford relaxation,

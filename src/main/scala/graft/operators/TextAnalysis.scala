@@ -694,7 +694,7 @@ object TextAnalysis extends QueryModule {
     * rounded to 6. */
   /** t19's scoring body WITHOUT the presentation sort — t21 consumes
     * this (it only aggregates, so t19's doc_id range sort would be two
-    * wasted corpus-sized exchanges inside t21's doubled subtree). */
+    * wasted corpus-sized exchanges under t21's histogram). */
   private def t19Scored(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val V = 1000
@@ -779,39 +779,36 @@ object TextAnalysis extends QueryModule {
     * engines because the comparisons share one bit-identical cutpoint.
     *
     * Shape at 100 TB: t19's two scans + broadcast model, then ONE
-    * 2-value percentile scalar broadcast back over the doc scores —
-    * no corpus sort, no window; the tier label is a map-side CASE. */
+    * map-combined (score, length) histogram, which both the cutpoints
+    * and the tier aggregate read — no corpus sort, no window, no cache. */
   private def t21(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // r13 (100× probe: t21 read 11.6 s ≈ 2× t19's 5.7 s — the scored
-    // subtree executed TWICE, once under the percentile branch and once
-    // under the tier aggregate, and each copy dragged t19's
-    // presentation sort along). Two fixes: consume t19Scored (no sort —
-    // this aggregate never needed it), and persist the |docs|-sized
-    // score table DISK_ONLY so the cutpoint pass populates the cache
-    // and the tier pass reads it (the sortedOnce discipline: one
-    // compute, zero heap growth, lineage intact).
-    val scored = t19Scored(spark, dir)
-      .select($"doc_id", $"n_tok", $"mean_logprob")
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // round(·, 6) on an already-6-decimal value is the IDENTITY (bit-
+    // The cutpoints are `percentile` over the histogram weighted by its
+    // doc counts (the same multiset as the per-doc scores), and the
+    // tier sums are exact: integer counts and decimal score × count.
+    // Both readers group by the same keys (a grouping key is never
+    // pruned, where an unread aggregate column is), so the histogram's
+    // exchange is one plan under both, AQE reuses it, and the scored
+    // subtree runs once without a cached frame.
+    val hist = t19Scored(spark, dir)
+      .groupBy($"mean_logprob", $"n_tok")
+      .agg(count(lit(1)).as("n_docs"))
+    // round(·, 6) on an already-6-decimal score is the IDENTITY (bit-
     // identical: |score| ≤ ~20 ≪ the idempotence bound), re-stated here
-    // because the cache boundary hides t19's producing round() from the
-    // catalog-wide percentile-state walk — the quantization is real,
-    // this keeps it provable.
-    val cuts = scored.agg(
-      percentile(round($"mean_logprob", 6), lit(0.25)).as("c_lo"),
-      percentile(round($"mean_logprob", 6), lit(0.75)).as("c_hi"))
-    scored.crossJoin(broadcast(cuts))
-      .select($"n_tok", $"mean_logprob",
+    // so the catalog-wide percentile-state walk sees the quantization.
+    val cuts = hist.agg(
+      percentile(round($"mean_logprob", 6), lit(0.25), $"n_docs").as("c_lo"),
+      percentile(round($"mean_logprob", 6), lit(0.75), $"n_docs").as("c_hi"))
+    hist.crossJoin(broadcast(cuts))
+      .select($"n_docs", $"n_tok", $"mean_logprob",
         when($"mean_logprob" < $"c_lo", "tail")
           .when($"mean_logprob" > $"c_hi", "head")
           .otherwise("middle").as("tier"))
       .groupBy($"tier")
-      .agg(count(lit(1)).as("n_docs"),
-        sum($"n_tok").as("total_tokens"),
-        round(sum($"mean_logprob".cast("decimal(18,6)")).cast("double")
-          / count(lit(1)), 6).as("mean_score"))
+      .agg(sum($"n_docs").as("n_docs"),
+        sum($"n_tok" * $"n_docs").as("total_tokens"),
+        round((sum($"mean_logprob".cast("decimal(18,6)") * $"n_docs")).cast("double")
+          / sum($"n_docs"), 6).as("mean_score"))
       .orderBy($"tier")
   }
 

@@ -260,6 +260,44 @@ class GraphSpec extends AnyFunSuite {
       s"persistent RDDs grew $blocksAfterFirst -> $blocksAfterCycle across a dir cycle")
   }
 
+  test("two concurrent first requests for the mutual k-NN graph share one build") {
+    // The build runs an eager job (cappedPairs' max-degree probe); it
+    // runs outside the memo map's compute, under a per-entry holder, so
+    // concurrent first callers must still build once.
+    val G = graft.operators.Graph
+    val sc = spark.sparkContext
+    val d2 = dir.replace("sf0.001", "sf0.01") // the 10x fixture
+    def jobsIn(groups: String*): Int = {
+      Thread.sleep(1500) // the status store feeds from the async listener bus
+      groups.map(sc.statusTracker.getJobIdsForGroup(_).length).sum
+    }
+    def inGroup[A](group: String)(body: => A): A = {
+      sc.setJobGroup(group, "GraphSpec concurrent build")
+      try body finally sc.clearJobGroup()
+    }
+    G.mutualKnn(spark, d2) // evicts this suite's dir
+    inGroup("knn-solo")(G.mutualKnn(spark, dir))
+    val solo = jobsIn("knn-solo")
+    assert(solo > 0, "a first build runs the max-degree probe")
+    G.mutualKnn(spark, d2)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val builds = Seq("knn-a", "knn-b").map(g =>
+        pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+          def call(): org.apache.spark.sql.DataFrame = {
+            start.await()
+            inGroup(g)(G.mutualKnn(spark, dir))
+          }
+        }))
+      start.countDown()
+      val Seq(a, b) = builds.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(a eq b, "both callers must get the one memoized frame")
+    } finally pool.shutdown()
+    assert(jobsIn("knn-a", "knn-b") == solo, "concurrent first callers built more than once")
+    assert(G.memoDirs(sc.applicationId) == Set(dir))
+  }
+
   test("graph artifact: content-exact, idempotent, re-registers a new session without rewriting, rebuilds on dir change") {
     import org.apache.spark.sql.functions._
     val G = graft.operators.Graph

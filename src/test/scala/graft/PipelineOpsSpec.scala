@@ -870,6 +870,34 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(rows("middle")._3 > rows("tail")._3)
   }
 
+  test("t21's score histogram equals the per-doc cutpoint and tier form, and leaves no cached frame") {
+    // The per-doc form t21 had before: exact percentiles over every
+    // doc's score, the tier CASE per doc, then the tier sums.
+    val scored = TextAnalysis.queries("t19_unigram_logprob")(spark, dir)
+    val cuts = scored.agg(
+      percentile(round(col("mean_logprob"), 6), lit(0.25)).as("c_lo"),
+      percentile(round(col("mean_logprob"), 6), lit(0.75)).as("c_hi"))
+    val perDoc = scored.crossJoin(cuts)
+      .select(col("n_tok"), col("mean_logprob"),
+        when(col("mean_logprob") < col("c_lo"), "tail")
+          .when(col("mean_logprob") > col("c_hi"), "head")
+          .otherwise("middle").as("tier"))
+      .groupBy(col("tier"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"),
+        round(sum(col("mean_logprob").cast("decimal(18,6)")).cast("double")
+          / count(lit(1)), 6).as("mean_score"))
+      .orderBy(col("tier"))
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val t21 = TextAnalysis.queries("t21_quality_tiers")(spark, dir)
+    assert(t21.collect().toSeq == perDoc.collect().toSeq) // bit-exact doubles included
+    // No cache entry: its plan reads no cached relation, and running it
+    // left no persisted block set behind.
+    assert(t21.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }.isEmpty)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty,
+      "t21 left a persisted frame behind")
+  }
+
   test("t24 BPE merge trace equals a driver-side trainer replay") {
     import spark.implicits._
     val got = graft.operators.TextAnalysis.queries("t24_bpe_merges")(spark, dir)

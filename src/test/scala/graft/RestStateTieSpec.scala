@@ -138,9 +138,13 @@ class RestStateTieSpec extends AnyFunSuite with RestHttp
     // A base row whose composite key has a NULL column (l_suppkey): it
     // counts toward task 3's capacity once compaction folds it into the
     // base, and it must survive every later merge, as the anti join the
-    // key-set filter replaced kept unmatched null keys.
-    store.submissions.upsert(Map("l_orderkey" -> 3L, "l_linenumber" -> 90,
-      "l_partkey" -> 0L, "l_suppkey" -> null, "status" -> "approved"))
+    // key-set filter replaced kept unmatched null keys. `upsert` refuses
+    // a null key column, so the row arrives the one way it still can:
+    // replayed from a write-ahead log written before that rule.
+    val nullKeyed = Map[String, Any]("l_orderkey" -> 3L, "l_linenumber" -> 90,
+      "l_partkey" -> 0L, "l_suppkey" -> null, "status" -> "approved")
+    intercept[IllegalArgumentException](store.submissions.upsert(nullKeyed))
+    store.submissions.replayOp(false, Seq(3L, 90, 0L, null), Some(nullKeyed))
 
     // The capacity guard survives COMPACTION (review fix): folding the
     // approved rows into the base and clearing the journal must not

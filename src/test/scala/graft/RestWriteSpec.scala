@@ -304,9 +304,13 @@ class RestWriteSpec extends AnyFunSuite with RestHttp
     // shape), never an OOM-able driver buffer. The server may respond
     // and close before the client finishes streaming — an IOException
     // on the client IS the bounded-read behavior observed early.
+    // Sent from its own client: a connection the server closed mid-body
+    // must not stay in the shared client's pool, where the next test's
+    // first request would fail on it ("header parser received no bytes").
     val big = "x" * (1 << 21)
+    val own = new RestHttp { val base = RestWriteSpec.this.base }
     val code =
-      try post("/submissions", s"""{"task_id":3,"blob":"$big"}""")._1
+      try own.post("/submissions", s"""{"task_id":3,"blob":"$big"}""")._1
       catch { case _: java.io.IOException => 413 }
     assert(code == 413, s"oversized body answered $code")
   }

@@ -1,7 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.sql.{Date, Timestamp}
+import graft.functions.BoundLiteral
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The store's own contracts, driven directly (no HTTP): the bounded
@@ -92,6 +99,21 @@ class StateStoreSpec extends AnyFunSuite {
       "a bare NOT IN would have dropped the null-key row")
     assert(e.countWhere(Map("v" -> "b")) == 1 && e.countWhere(Map("v" -> "c")) == 1)
     assert(e.lookupBy("v", "b").exists(_("id") == null))
+  }
+
+  test("upsert refuses a null or missing key column, single and composite, and journals nothing") {
+    import spark.implicits._
+    val e = new EntityState(spark, Seq((1L, "a")).toDF("id", "v"), Seq("id"))
+    Seq(Map[String, Any]("id" -> null, "v" -> "x"), Map[String, Any]("v" -> "x")).foreach { row =>
+      val err = intercept[IllegalArgumentException](e.upsert(row))
+      assert(err.getMessage.contains("key column id"), err.getMessage)
+    }
+    assert(e.journalSize == 0 && rowsOf(e) == Seq("[1,a]"))
+    val store = new StateStore(spark, dir)
+    val err = intercept[IllegalArgumentException](store.submissions.upsert(Map(
+      "l_orderkey" -> 1L, "l_linenumber" -> 1, "l_partkey" -> 1L, "l_suppkey" -> null)))
+    assert(err.getMessage.contains("key column l_suppkey"), err.getMessage)
+    assert(store.submissions.journalSize == 0)
   }
 
   test("current(where) answers current().filter(where): patched, tombstoned, new and null-key rows, single and composite keys") {
@@ -628,5 +650,202 @@ class StateStoreSpec extends AnyFunSuite {
     assert(u.isDefined, "the acknowledged registration must survive the kill")
     assert(u.get("role") == "worker",
       s"the acknowledged role patch must survive too: $u")
+  }
+
+  // ---- parameter binding: reads bind request values by reference ----
+  // A point read with a new key reuses the classes the last read
+  // compiled, answers the rows the interpreted engine and
+  // `current().filter(where)` give, and catalog plans render exactly as
+  // before.
+
+  /** Janino compiles so far in this JVM (codegen cache hits do not count). */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** `body` with expression codegen and whole-stage codegen both off. */
+  private def interpreted[A](body: => A): A = {
+    val confs = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def boundFilters(plan: SparkPlan): Seq[BoundLiteral] =
+    plan.collect { case f: FilterExec => f.condition.collect { case b: BoundLiteral => b } }.flatten
+
+  test("40 point reads and feeds with distinct keys compile at most one class in total") {
+    import spark.implicits._
+    val store = new StateStore(spark, dir)
+    val t = Tables(spark, dir)
+    val orderKeys = t.orders.select($"o_orderkey").as[Long].collect().sorted
+    val custKeys = t.orders.select($"o_custkey").distinct().as[Long].collect().sorted
+    val suppKeys = t.lineitem.select($"l_suppkey").distinct().as[Long].collect().sorted
+    val userIds = t.events.select($"user_id").distinct().as[Long].collect().sorted
+    assert(orderKeys.length > 60 && custKeys.length > 20 && suppKeys.length > 8 && userIds.length > 10)
+    // A journal on every entity read below, so each read takes the
+    // merged path: patched base rows, new rows and a tombstone.
+    Seq(store.tasks, store.payments).foreach { e =>
+      assert(e.patch(Seq(orderKeys(0)), Map("o_orderstatus" -> "X")))
+      e.upsert(Map("o_orderkey" -> (orderKeys.last + 1), "o_custkey" -> custKeys(0), "o_totalprice" -> 1.0))
+      assert(e.delete(Seq(orderKeys(1))))
+    }
+    // Journal rows that the warm-up's first key and every other
+    // measured key (indexes 2, 4, 6) match.
+    Seq(0, 2, 4, 6).foreach { i =>
+      if (i > 0) assert(store.tasks.patch(Seq(orderKeys(i)), Map("o_orderstatus" -> "X")))
+      if (i > 0) store.payments.upsert(Map("o_orderkey" -> (orderKeys.last + 1 + i),
+        "o_custkey" -> custKeys(i), "o_totalprice" -> 2.0))
+      store.submissions.upsert(Map("l_orderkey" -> orderKeys(i), "l_linenumber" -> 99,
+        "l_partkey" -> 0L, "l_suppkey" -> suppKeys(i), "status" -> "pending"))
+      store.notifications.upsert(Map("event_id" -> store.notifications.newId(),
+        "user_id" -> userIds(i), "event_type" -> "notification"))
+    }
+    val sub = t.lineitem.select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey").head()
+
+    // The route shapes of RestServe's parameterized reads, and the
+    // store's point reads and guard count.
+    val shapes: Seq[Long => Unit] = Seq(
+      k => store.tasks.current($"o_orderkey" === k).toJSON.collect(),
+      k => store.payments.current($"o_custkey" === k)
+        .select($"o_orderkey", $"o_orderdate", $"o_totalprice")
+        .orderBy($"o_orderkey".desc).limit(50).toJSON.collect(),
+      k => store.notifications.current($"user_id" === k)
+        .select($"event_id", $"ts", $"event_type")
+        .orderBy($"ts".desc, $"event_id".desc).limit(50).toJSON.collect(),
+      k => store.submissions.current($"l_suppkey" === k)
+        .select($"l_orderkey", $"l_linenumber", $"l_quantity", $"l_returnflag")
+        .orderBy($"l_orderkey".desc, $"l_linenumber".desc).limit(50).toJSON.collect(),
+      k => store.tasks.lookup(Seq(k)),
+      k => store.submissions.lookup(Seq(k, sub.getInt(1), sub.getLong(2), sub.getLong(3))),
+      k => store.payments.countWhere(Map("o_custkey" -> k)))
+    val keysOf: Seq[Array[Long]] =
+      Seq(orderKeys, custKeys, userIds, suppKeys, orderKeys, orderKeys, custKeys)
+    // Warm-up: every shape once with a journal match and once without.
+    shapes.zip(keysOf).foreach { case (read, ks) => read(ks(0)); read(ks.last) }
+    val before = compiles()
+    // 40 reads, each with a key no earlier read used: hits, misses
+    // (key + 1 past a base key may exist or not) and journal rows.
+    val measured = (0 until 40).map { i =>
+      val s = i % shapes.size
+      val ks = keysOf(s)
+      val k = if (i % 3 == 2) ks(2 + i / shapes.size) + 1000000L else ks(2 + i / shapes.size)
+      shapes(s)(k)
+      (s, k)
+    }
+    assert(measured.distinct.size == 40)
+    val compiled = compiles() - before
+    assert(compiled <= 1, s"40 distinct-key reads compiled $compiled classes")
+  }
+
+  /** A parquet base (so the filter runs over a real scan with pushed
+    * filters) with Long key `id`, Int, Date and Timestamp columns and a
+    * null-keyed row. */
+  private def typedEntity(): EntityState = {
+    import spark.implicits._
+    val path = Scratch.tempDir("param-binding") + "/base"
+    Seq[(Option[Long], Int, Date, Timestamp, String)](
+      (Some(1L), 10, Date.valueOf("2024-01-01"), Timestamp.valueOf("2024-01-01 00:00:01"), "a"),
+      (Some(2L), 20, Date.valueOf("2024-01-02"), Timestamp.valueOf("2024-01-02 00:00:01"), "b"),
+      (Some(3L), 30, Date.valueOf("2024-01-03"), Timestamp.valueOf("2024-01-03 00:00:01"), "c"),
+      (None, 20, Date.valueOf("2024-01-02"), Timestamp.valueOf("2024-01-02 00:00:01"), "n"),
+      (Some(4L), 40, Date.valueOf("2024-01-04"), Timestamp.valueOf("2024-01-04 00:00:01"), "d"))
+      .toDF("id", "i", "d", "ts", "v").write.parquet(path)
+    val e = new EntityState(spark, spark.read.parquet(path), Seq("id"))
+    assert(e.patch(Seq(2L), Map("i" -> 21, "v" -> "b2")))  // a patched base row
+    e.upsert(Map("id" -> 5L, "i" -> 20, "d" -> Date.valueOf("2024-01-02"),
+      "ts" -> Timestamp.valueOf("2024-01-05 00:00:01"), "v" -> "e")) // journal only
+    assert(e.delete(Seq(3L)))                              // a tombstoned base row
+    e
+  }
+
+  test("bound reads answer the interpreted engine's rows and current().filter(where)'s: hits, misses, tombstones, journal-only and null-keyed rows, Int/Long/Date/Timestamp") {
+    val e = typedEntity()
+    val wheres: Seq[(String, Column)] = Seq(
+      "base hit" -> (col("id") === 1L),
+      "patched" -> (col("id") === 2L),
+      "tombstoned" -> (col("id") === 3L),
+      "journal only" -> (col("id") === 5L),
+      "miss" -> (col("id") === 99L),
+      "int, null-keyed base row" -> (col("i") === 20),
+      "date" -> (col("d") === Date.valueOf("2024-01-02")),
+      "timestamp range" -> (col("ts") >= Timestamp.valueOf("2024-01-02 00:00:00") &&
+        col("ts") < Timestamp.valueOf("2024-01-04 00:00:00")),
+      "in list" -> col("id").isin(1L, 3L, 5L, 99L),
+      "long range and int" -> (col("id") > 1L && col("i") <= 40))
+    wheres.foreach { case (name, w) =>
+      val bound = rows(e.current(w))
+      assert(bound == rows(e.current().filter(w)), name)
+      assert(bound == interpreted(rows(e.current(w))), name)
+    }
+    assert(rows(e.current(col("i") === 20)) ==
+      Seq("[5,20,2024-01-02,2024-01-05 00:00:01.0,e]", "[null,20,2024-01-02,2024-01-02 00:00:01.0,n]"))
+    Seq(1L, 2L, 3L, 5L, 99L).foreach { k =>
+      assert(e.lookup(Seq(k)) == interpreted(e.lookup(Seq(k))), s"lookup $k")
+    }
+    assert(e.lookup(Seq(1L)).exists(_("v") == "a") && e.lookup(Seq(3L)).isEmpty)
+    // The rule fired on the base side, and the scan still pushed the
+    // real literal.
+    val plan = e.current(col("id") === 1L && col("i") === 10).queryExecution.executedPlan
+    assert(boundFilters(plan).map(_.value).toSet == Set(1L, 10), plan.toString)
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
+    assert(scan.dataFilters.exists(_.exists(_ == Literal(1L))), scan.toString)
+  }
+
+  test("composite submissions keys: bound reads equal the interpreted engine's and current().filter(where)'s") {
+    import spark.implicits._
+    val store = new StateStore(spark, dir)
+    val t = Tables(spark, dir)
+    val base = t.lineitem.select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
+      .orderBy($"l_orderkey", $"l_linenumber").limit(3).collect()
+    def key(i: Int): Seq[Any] = base(i).toSeq
+    val s = store.submissions
+    assert(s.patch(key(0), Map("l_quantity" -> 7.0)))
+    assert(s.delete(key(1)))
+    s.upsert(Map("l_orderkey" -> base(2).getLong(0), "l_linenumber" -> 77,
+      "l_partkey" -> base(2).getLong(2), "l_suppkey" -> base(2).getLong(3), "status" -> "pending"))
+    val supp = base.map(_.getLong(3)).toSeq
+    val wheres = supp.map(v => col("l_suppkey") === v) ++ Seq(
+      col("l_orderkey") === base(0).getLong(0) && col("l_linenumber") === base(0).getInt(1),
+      col("l_orderkey") === base(1).getLong(0) && col("l_linenumber") === base(1).getInt(1),
+      col("l_orderkey") === -1L)
+    wheres.foreach { w =>
+      val bound = rows(s.current(w))
+      assert(bound == rows(s.current().filter(w)), w.toString)
+      assert(bound == interpreted(rows(s.current(w))), w.toString)
+    }
+    val keys = Seq(key(0), key(1), key(2), Seq(base(2).getLong(0), 77, base(2).getLong(2), base(2).getLong(3)),
+      Seq(-1L, 1, 1L, 1L))
+    keys.foreach(k => assert(s.lookup(k) == interpreted(s.lookup(k)), k.toString))
+    assert(s.lookup(key(1)).isEmpty && s.lookup(key(0)).exists(_("l_quantity") == 7.0))
+  }
+
+  test("catalog plans render byte-identically: ReadPath P2's executed plan binds its key and prints the literal") {
+    val qe = SparkEntry.queries("p2_point_lookup_id")(spark, dir).queryExecution
+    val plan = qe.executedPlan
+    assert(boundFilters(plan).map(_.value) == Seq(7L), plan.toString)
+    val asLiterals = plan.transformAllExpressions {
+      case b: BoundLiteral => Literal(b.value, b.dataType)
+    }
+    assert(boundFilters(asLiterals).isEmpty)
+    assert(plan.toString == asLiterals.toString)
+    assert(plan.toString.contains("(o_orderkey#") && plan.toString.contains("= 7)"), plan.toString)
+    assert(plan.toString.contains("EqualTo(o_orderkey,7)"), "the scan's pushed filter keeps the literal")
+  }
+
+  test("a bound literal renders, evaluates and prints SQL exactly as the literal it replaces") {
+    val values: Seq[(Any, DataType)] = Seq(true -> BooleanType, 3.toByte -> ByteType, 4.toShort -> ShortType,
+      5 -> IntegerType, 6L -> LongType, 1.5f -> FloatType, -2.5 -> DoubleType,
+      Double.NaN -> DoubleType, 19000 -> DateType, 1700000000000000L -> TimestampType,
+      1700000000000000L -> TimestampNTZType)
+    values.foreach { case (v, t) =>
+      val b = BoundLiteral(v, t)
+      val l = Literal(v, t)
+      assert(b.toString == l.toString && b.sql == l.sql && java.util.Objects.equals(b.eval(), l.eval()), s"$v: $t")
+      assert(b.dataType == l.dataType && !b.nullable && b.foldable)
+    }
+    assert(!BoundLiteral.inlined(StringType) && !BoundLiteral.inlined(DecimalType(10, 2)))
   }
 }
