@@ -3,8 +3,11 @@ package graft
 import graft.functions.{BoundLiteral, FloatDotProduct, ShingleHashArray, SortedLongIntersectCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, ExpressionInfo, In, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, ExpressionInfo, In, InterpretedOrdering, Literal}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{LOCAL_RELATION, SORT}
 import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
 
 /** Library packaging for the engine's custom expressions: install via
@@ -17,12 +20,14 @@ import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
   * registration. `VectorFunctions.register` remains as the programmatic
   * fallback for sessions created without the conf. It also installs
   * [[BindFilterLiterals]], the physical rule that keeps request values
-  * out of generated code. */
+  * out of generated code, and [[SortLocalRelation]], the optimizer rule
+  * that sorts a local relation on the driver. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = BindFilterLiterals
     })
+    ext.injectOptimizerRule(_ => SortLocalRelation)
     ext.injectFunction((
       FunctionIdentifier("float_dot"),
       new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),
@@ -211,4 +216,25 @@ object BindFilterLiterals extends Rule[SparkPlan] {
     case Literal(v, t) if v != null && BoundLiteral.inlined(t) => BoundLiteral(v, t)
     case other => other
   }
+}
+
+/** Optimizer rule: a global `Sort` over a `LocalRelation` becomes the
+  * relation with its rows sorted on the driver, by an interpreted
+  * ordering (no generated class). `ConvertToLocalRelation` already folds
+  * `Project`, `Filter` and `Limit` over a local relation this way; with
+  * `Sort` folded too, a serving feed whose rows all live in the journal
+  * (`EntityState.current(where)` once the base's statistics rule the
+  * key out) optimizes to one local relation, which collects with no
+  * Spark job. The sort is stable, and its ordering is the one Spark's
+  * sort uses (nulls first or last, NaN greatest). Partition-local sorts,
+  * streaming relations and sort keys that cannot be evaluated on the
+  * driver are left alone; the tree-pattern guard makes the rule free on
+  * plans without both a sort and a local relation. */
+object SortLocalRelation extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsAllPatterns(SORT, LOCAL_RELATION)) {
+      case Sort(order, true, l: LocalRelation, _) if !l.isStreaming &&
+          order.forall(o => o.deterministic && !ConvertToLocalRelation.hasUnevaluableExpr(o.child)) =>
+        l.copy(data = l.data.sorted(new InterpretedOrdering(order, l.output)))
+    }
 }

@@ -6,7 +6,7 @@ import java.util.concurrent.Executors
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's ENTIRE HTTP surface as a literal façade over the
@@ -107,6 +107,20 @@ object RestServe {
     }
   private def msg(status: Int, text: String): Res =
     Res(status, s"""{"message":"${esc(text)}"}""")
+
+  /** Every read route's rendering: `df`'s rows as JSON objects, the text
+    * `df.toJSON` gives, but computed by the plan itself, as
+    * `to_json(struct(<output attributes>))`, and fetched by `collect()`,
+    * which ends in the physical plan's `executeCollect`. So a plan that
+    * the optimizer folds into a local relation (a feed whose rows all
+    * live in the journal) starts no Spark job, and a sorted, limited
+    * feed over the base collects through TakeOrderedAndProject in one
+    * stage, where `toJSON`'s row-mapping job ran it as two. The struct
+    * takes the plan's output attributes, not column names, so duplicate
+    * and dotted names render as `toJSON` renders them. */
+  private[graft] def jsonRows(df: DataFrame): Array[String] =
+    df.select(to_json(struct(df.queryExecution.analyzed.output.map(GraftColumns.of): _*)))
+      .collect().map(_.getString(0))
 
   // ---- server errors ------------------------------------------------
 
@@ -306,8 +320,8 @@ object RestServe {
           Right(SparkEntry.queries(name)(spark, dir).limit(cap(params)))
         else
           Left(Res(200, catalogMemo.computeIfAbsent(name, _ =>
-            SparkEntry.queries(name)(spark, dir).limit(cap(params))
-              .toJSON.collect().mkString("[", ",", "]"))))
+            jsonRows(SparkEntry.queries(name)(spark, dir).limit(cap(params)))
+              .mkString("[", ",", "]"))))
 
     // Parameterized entity reads — the reference's :id / query-param
     // routes, each the parameterized form of a catalog read (ReadPath
@@ -319,6 +333,9 @@ object RestServe {
     // value is bound by reference, not inlined into generated code
     // (BindFilterLiterals; the journal side is filtered on the driver),
     // so a read with a new id reuses the classes the last read compiled.
+    // A value outside every row group's min/max of the base (a fresh
+    // user's key) leaves only journal rows, which plan and collect on
+    // the driver with no Spark job (see StateStore's scaladoc).
     def taskById(params: Map[String, String]): Option[DataFrame] =
       params.get("id").flatMap(_.toLongOption).map { id =>
         store.tasks.current($"o_orderkey" === id) // P2, index.js:1017-1029
@@ -1039,11 +1056,10 @@ object RestServe {
           // colliding id — 0 is a real history vector — would silently
           // drop that vector from every wire response (the r9 ADVICE
           // finding).
-          val rows = graft.streaming.StreamingAnnIngest
+          val rows = jsonRows(graft.streaming.StreamingAnnIngest
             .serve(spark, dir, statePath, vec, k)
             .orderBy($"rank")
-            .select($"rank", $"neighbor_id", $"sim_r")
-            .toJSON.collect()
+            .select($"rank", $"neighbor_id", $"sim_r"))
           Res(200, rows.mkString("[", ",", "]"))
       }
     }
@@ -1242,14 +1258,14 @@ object RestServe {
                     case CheckedReadH(run) => run(params) match {
                       case Left(res) => respond(ex, res)
                       case Right(df) =>
-                        val rows = df.toJSON.collect()
+                        val rows = jsonRows(df)
                         respond(ex, Res(200, rows.mkString("[", ",", "]")))
                     }
                     case rh: ReadH => rh.make(params) match {
                       case None =>
                         respond(ex, msg(400, "missing or malformed parameter"))
                       case Some(df) =>
-                        val rows = df.toJSON.collect()
+                        val rows = jsonRows(df)
                         // Key-addressed lookups 404 on absence, the
                         // reference's shape (index.js:1023-1027);
                         // listings return [] — a per-route decision.

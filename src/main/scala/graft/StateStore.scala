@@ -10,7 +10,8 @@ import graft.functions.{KeySet, KeySetProbe}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumns, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BindReferences, EqualTo, Expression, Literal, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
@@ -50,10 +51,23 @@ import org.apache.spark.sql.types._
   *     classes the last read compiled. When the journal is empty,
   *     `current()` returns the base RELATION ITSELF, so an unwritten
   *     entity plans and serves byte-identically to the read-only façade.
+  *   - PLAN-TIME BASE SKIPPING: each base's parquet footers are read
+  *     once, on the driver ([[BaseStats]]). When `where` holds
+  *     `column = value` and no row group's min/max can hold the value
+  *     (parquet-mr's own `StatisticsFilter` decides, as a task would),
+  *     `current(where)` drops the base side and returns the journal rows
+  *     `where` keeps as a local relation. A read of a fresh user's feed
+  *     or profile then optimizes to one local relation and starts 0
+  *     Spark jobs (`SortLocalRelation` sorts it, `RestServe.jsonRows`
+  *     collects it); a read the statistics cannot rule out scans the
+  *     base as before. [[EntityState.lookup]] and
+  *     [[EntityState.countWhere]] make the same check, so a PATCH or
+  *     DELETE of an id outside the base's ranges answers with no job.
   *   - GUARD COUNTS ([[EntityState.countWhere]]) use the same key set:
   *     journal rows count on the driver, and the base is scanned only
-  *     when its schema carries every predicate column — so a guard
-  *     whose rows all live in the journal starts no Spark job.
+  *     when its schema carries every predicate column and its
+  *     statistics do not rule the values out — so a guard whose rows
+  *     all live in the journal starts no Spark job.
   *   - SCHEMA EVOLUTION: journal rows may carry columns the base lacks
   *     (the reference's collections are schemaless; its inserts attach
   *     whatever the handler builds, index.js:494-506). `current()`
@@ -629,6 +643,7 @@ final class EntityState(
   private[graft] def adoptBase(path: String): Unit = synchronized {
     base = spark.read.parquet(path)
     blooms = Map.empty
+    stats = null
     dirtySinceCheckpoint = false
   }
 
@@ -651,6 +666,7 @@ final class EntityState(
     journal.clear()
     extras = Vector.empty
     base = spark.read.parquet(path)
+    stats = null
   }
 
   /** key → Some(full row as column→value) for upserts, None for
@@ -699,14 +715,64 @@ final class EntityState(
       })
     }
 
-  /** False only when the base PROVABLY lacks `value` in `column`. */
-  private def mightBeInBase(column: String, value: Any): Boolean =
-    (base.schema(column).dataType, value) match {
-      case (StringType, s: String) => baseBloom(column).forall(_.mightContainString(s))
-      case (LongType, l: Long)     => baseBloom(column).forall(_.mightContainLong(l))
-      case (IntegerType, i: Int)   => baseBloom(column).forall(_.mightContainLong(i.toLong))
+  /** The row-group statistics of the base they were read from (see
+    * [[statsOf]]). Reset with the base in [[foldInto]] and [[adoptBase]]. */
+  @volatile private var stats: BaseStats = null
+
+  /** `b`'s parquet footer statistics, read once per base: keyed by the
+    * base's identity, so a reader holding a base that a fold has since
+    * replaced never sees another base's statistics. */
+  private def statsOf(b: DataFrame): BaseStats = {
+    val cached = stats
+    if (cached != null && (cached.base eq b)) cached
+    else {
+      val read = BaseStats.read(spark, b)
+      stats = read
+      read
+    }
+  }
+
+  /** False only when base `b` PROVABLY lacks `value` in `column`: its
+    * parquet row-group statistics rule the value out, or a Bloom over
+    * the column does. The statistics cost no job once read. A Bloom is
+    * built only for `buildBloom` callers (the secondary-key guard,
+    * [[lookupBy]]); every other caller uses one only when it is already
+    * built. A Bloom only ever grows when the base is folded, so one
+    * over the live base also answers for a base it replaced. */
+  private def mightBeInBase(b: DataFrame, column: String, value: Any,
+                            buildBloom: Boolean): Boolean =
+    statsOf(b).mightHold(column, value) && {
+      def bloom = if (buildBloom) baseBloom(column) else synchronized(blooms.get(column).flatten)
+      (b.schema(column).dataType, value) match {
+        case (StringType, s: String) => bloom.forall(_.mightContainString(s))
+        case (LongType, l: Long)     => bloom.forall(_.mightContainLong(l))
+        case (IntegerType, i: Int)   => bloom.forall(_.mightContainLong(i.toLong))
+        case _ => true
+      }
+    }
+
+  /** False when a conjunct of `filtered`'s condition (a filter over base
+    * `b`) is `column = value` for a value `b` provably lacks: a non-null
+    * literal of the column's own type, so no cast sits between the
+    * column and the comparison. */
+  private def baseMayMatch(b: DataFrame, filtered: DataFrame): Boolean = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def ruledOut(a: AttributeReference, l: Literal): Boolean =
+      l.value != null && a.dataType == l.dataType &&
+        !mightBeInBase(b, a.name, CatalystTypeConverters.convertToScala(l.value, l.dataType),
+          buildBloom = false)
+    filtered.queryExecution.analyzed match {
+      case Filter(cond, _) => !conjuncts(cond).exists {
+        case EqualTo(a: AttributeReference, l: Literal) => ruledOut(a, l)
+        case EqualTo(l: Literal, a: AttributeReference) => ruledOut(a, l)
+        case _ => false
+      }
       case _ => true
     }
+  }
 
   /** Compaction folds journal rows into the base — fold their values
     * into the live sketches too (insert-only, so the one-sided error
@@ -892,15 +958,20 @@ final class EntityState(
 
   /** Point read: journal first (O(1), no job), then a pruned base scan
     * — the serving-tier read path (at scale: journal = hot cache,
-    * base = key-pruned parquet point scan). */
+    * base = key-pruned parquet point scan). A key value the base
+    * provably lacks ([[mightBeInBase]]) answers None with no scan. */
   def lookup(key: Seq[Any]): Option[Map[String, Any]] = {
     val nk = normKey(key)
-    synchronized(journal.get(nk)) match {
+    val (entry, b) = synchronized((journal.get(nk), base))
+    entry match {
       case Some(v) => v // Some(row) or None (tombstoned)
+      // A key value the base provably lacks: absent, with no job.
+      case None if keyCols.zip(nk).exists { case (c, v) =>
+          !mightBeInBase(b, c, v, buildBloom = false) } => None
       case None =>
         val pred = keyCols.zip(nk)
           .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-        base.filter(pred).limit(1).collect().headOption
+        b.filter(pred).limit(1).collect().headOption
           .map(r => r.schema.fieldNames.zip(r.toSeq).toMap)
     }
   }
@@ -930,7 +1001,7 @@ final class EntityState(
         // Bloom fast path: a provably-absent value answers in O(1)
         // driver time — the write path's guard probes (new email on
         // every registration) never pay a Spark job for "no".
-        else if (!mightBeInBase(column, value)) None
+        else if (!mightBeInBase(base, column, value, buildBloom = true)) None
         else {
           withoutSuperseded(base.filter(col(column) === lit(value)), snap.map(_._1))
             .orderBy(keyCols.map(col): _*).limit(1).collect().headOption
@@ -958,24 +1029,32 @@ final class EntityState(
     * evaluates them in that order: after `current().filter(where)` the
     * key-set probe runs on every base row, here only on the rows
     * `where` keeps. The journal rows are tested against `where` on the
-    * driver ([[journalMatches]]). `where` reads base columns. */
+    * driver ([[journalMatches]]), and the base is left out when its
+    * statistics rule out an equality in `where` ([[baseMayMatch]]).
+    * `where` reads base columns. */
   def current(where: Column): DataFrame = merged(Some(where))
 
   private def merged(where: Option[Column]): DataFrame = {
     val (snapRows, snapKeys, snapFields, snapBase) = snapshot()
     val base = where.fold(snapBase)(snapBase.filter)
-    if (snapKeys.isEmpty) base
+    val baseMay = where.isEmpty || baseMayMatch(snapBase, base)
+    if (snapKeys.isEmpty && baseMay) base
     else {
       val schema = StructType(snapFields)
       val delta = LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(schema),
         snapRows.map(m => Row.fromSeq(schema.map(f => m.getOrElse(f.name, null)))))
       val kept = where.fold(delta.data)(w => journalMatches(delta, w))
-      val rest = withoutSuperseded(base, snapKeys)
-      if (kept.nonEmpty)
-        rest.unionByName(GraftColumns.ofRows(spark, delta.copy(data = kept)), allowMissingColumns = true)
-      else // no journal row to add: the base side alone, its evolved columns null
-        rest.select(col("*") +: schema.filterNot(f => rest.columns.contains(f.name))
-          .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+      // The base's statistics rule `where` out: the journal rows alone,
+      // a local relation that the read plans and collects on the driver.
+      if (!baseMay) GraftColumns.ofRows(spark, delta.copy(data = kept))
+      else {
+        val rest = withoutSuperseded(base, snapKeys)
+        if (kept.nonEmpty)
+          rest.unionByName(GraftColumns.ofRows(spark, delta.copy(data = kept)), allowMissingColumns = true)
+        else // no journal row to add: the base side alone, its evolved columns null
+          rest.select(col("*") +: schema.filterNot(f => rest.columns.contains(f.name))
+            .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+      }
     }
   }
 
@@ -1009,7 +1088,8 @@ final class EntityState(
     val inJournal = snapRows.count(r =>
       want.forall { case (c, v) => v != null && r.get(c).contains(v) })
     val inBase =
-      if (!want.keys.forall(snapBase.columns.contains)) 0L
+      if (!want.keys.forall(snapBase.columns.contains) || want.exists { case (c, v) =>
+          !mightBeInBase(snapBase, c, v, buildBloom = false) }) 0L
       else withoutSuperseded(want.foldLeft(snapBase) {
         case (df, (c, v)) => df.filter(col(c) === lit(v))
       }, snapKeys).count()

@@ -58,7 +58,7 @@ object Graph extends QueryModule {
     * map-side down to |V| partials, and the |V|-row result broadcasts
     * back — the corpus aggregate shuffles once, total. */
   private val edgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame, DataFrame)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Once[(DataFrame, DataFrame, DataFrame)]]()
 
   /** The PERSISTED graph artifact (s6/d10's offline-index pattern): the
     * co-purchase pairs, the weighted edge list, and the node table are
@@ -197,8 +197,11 @@ object Graph extends QueryModule {
 
   private[graft] def graphFrames(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val app = spark.sparkContext.applicationId
-    evictOtherDirs(edgeMemo, app, dir)(v => Seq(v._1, v._2, v._3))
-    edgeMemo.computeIfAbsent((app, dir), _ => {
+    evictOtherDirs(edgeMemo, app, dir)(_.built.toSeq.flatMap(v => Seq(v._1, v._2, v._3)))
+    // Built through a `Once`, outside the map's compute: the artifact's
+    // parquet writes are Spark jobs, and they must not run holding a bin
+    // lock of the map.
+    edgeMemo.computeIfAbsent((app, dir), _ => new Once(() => {
       // Serve the build from the persisted artifact; `checkpointed`
       // keeps the in-session behavior identical (the iteration loops
       // reference these frames in many plan subtrees, and repeated
@@ -208,7 +211,7 @@ object Graph extends QueryModule {
       val w = checkpointed(spark.table(EdgesTable))
       val nodes = checkpointed(spark.table(s"${CatalogOps.Database}.graph_nodes"))
       (pairs, w, nodes)
-    })
+    })).get
   }
 
   private def g1(spark: SparkSession, dir: String): DataFrame = {

@@ -298,6 +298,34 @@ class GraphSpec extends AnyFunSuite {
     assert(G.memoDirs(sc.applicationId) == Set(dir))
   }
 
+  test("two concurrent first requests for the graph frames share one artifact build") {
+    // The build writes the graph artifact (parquet writes, so Spark
+    // jobs) after a fixture flip; it runs outside the memo map's
+    // compute, under a per-entry holder, so concurrent first callers
+    // must still build once and get the same frames.
+    val G = graft.operators.Graph
+    val d2 = dir.replace("sf0.001", "sf0.01") // the 10x fixture
+    G.graphFrames(spark, d2) // evicts this suite's dir and rewrites the artifact
+    val (soloFrames, solo) = JobCount(spark)(G.graphFrames(spark, dir))
+    assert(solo > 0, "a first build after a flip rewrites the artifact")
+    G.graphFrames(spark, d2)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val (frames, both) = JobCount(spark) {
+      try {
+        val builds = (1 to 2).map(_ =>
+          pool.submit(new java.util.concurrent.Callable[AnyRef] {
+            def call(): AnyRef = { start.await(); G.graphFrames(spark, dir) }
+          }))
+        start.countDown()
+        builds.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+    }
+    assert(frames(0) eq frames(1), "both callers must get the one memoized frames")
+    assert(both == solo, s"concurrent first callers started $both jobs, one build starts $solo")
+    assert(soloFrames ne frames(0))
+  }
+
   test("graph artifact: content-exact, idempotent, re-registers a new session without rewriting, rebuilds on dir change") {
     import org.apache.spark.sql.functions._
     val G = graft.operators.Graph

@@ -6,6 +6,7 @@ import graft.functions.BoundLiteral
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -847,5 +848,108 @@ class StateStoreSpec extends AnyFunSuite {
       assert(b.dataType == l.dataType && !b.nullable && b.foldable)
     }
     assert(!BoundLiteral.inlined(StringType) && !BoundLiteral.inlined(DecimalType(10, 2)))
+  }
+
+  // ---- plan-time base skipping: the base's footer statistics --------
+  // A key value outside every row group's min/max answers from the
+  // journal alone, on the driver; any other value reads the base as
+  // before, and the statistics follow the base through every swap.
+
+  test("lookup and countWhere: an id outside the base's row groups answers None or 0 with no Spark job; ids inside answer as before") {
+    import spark.implicits._
+    val store = new StateStore(spark, dir)
+    val t = Tables(spark, dir)
+    val keys = t.orders.select($"o_orderkey").as[Long].collect().sorted
+    val gap = keys.sliding(2).collectFirst { case Array(a, b) if b > a + 1 => a + 1 }
+    val out = keys.last + 1000000L
+    val sub = t.lineitem.select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey").head()
+    val outside: Seq[(String, () => Any, Any)] = Seq(
+      ("lookup", () => store.tasks.lookup(Seq(out)), None),
+      ("lookup below the minimum", () => store.tasks.lookup(Seq(-1L)), None),
+      ("composite lookup", () => store.submissions.lookup(
+        Seq(out, sub.getInt(1), sub.getLong(2), sub.getLong(3))), None),
+      ("patch", () => store.tasks.patch(Seq(out), Map("o_orderstatus" -> "X")), false),
+      ("delete", () => store.tasks.delete(Seq(out)), false),
+      ("countWhere", () => store.payments.countWhere(Map("o_custkey" -> out)), 0L),
+      ("string countWhere", () => store.users.countWhere(Map("c_name" -> "zz@graft.io")), 0L))
+    outside.foreach { case (name, read, want) =>
+      val (got, jobs) = JobCount(spark)(read())
+      assert(got == want, name)
+      assert(jobs == 0, s"$name started $jobs Spark jobs")
+    }
+    // Inside the ranges: present keys, a key in a gap between present
+    // ones if the fixture has one, and counts, each reading the base
+    // with the answer it gave.
+    (Seq(keys(0), keys(keys.length / 2)) ++ gap).foreach { k =>
+      val want = t.orders.filter($"o_orderkey" === k).collect().headOption
+        .map(r => r.schema.fieldNames.zip(r.toSeq).toMap)
+      val (got, jobs) = JobCount(spark)(store.tasks.lookup(Seq(k)))
+      assert(got == want, s"lookup $k")
+      assert(jobs > 0, s"lookup $k must read the base")
+    }
+    val cust = t.orders.select($"o_custkey").as[Long].head()
+    val (_, countJobs) = JobCount(spark)(t.orders.filter($"o_custkey" === cust).count())
+    val (n, jobs) = JobCount(spark)(store.payments.countWhere(Map("o_custkey" -> cust)))
+    assert(n == t.orders.filter($"o_custkey" === cust).count())
+    // No Bloom is built on the way: that would add its own jobs.
+    assert(jobs == countJobs, s"countWhere started $jobs jobs, the bare count $countJobs")
+    // A value inside the string column's range that the base lacks:
+    // only a Bloom can rule it out. The secondary-key guard builds one;
+    // reads then consult it and start no job.
+    val first = t.customer.select(min($"c_name")).as[String].head()
+    assert(store.users.lookupBy("c_name", first + "x").isEmpty)
+    val (absent, bloomJobs) = JobCount(spark)(store.users.countWhere(Map("c_name" -> (first + "y"))))
+    assert(absent == 0L && bloomJobs == 0, s"a Bloom-ruled-out count started $bloomJobs jobs")
+  }
+
+  test("a read the base's statistics rule out keeps the merged shape: base columns, then evolved ones") {
+    import spark.implicits._
+    val store = new StateStore(spark, dir)
+    val e = store.notifications
+    val user = 3000000L
+    e.upsert(Map("event_id" -> e.newId(), "user_id" -> user, "event_type" -> "notification",
+      "message" -> "hello", "read" -> false))
+    Seq(user, user + 1).foreach { u =>
+      val w = $"user_id" === u
+      val pruned = e.current(w)
+      assert(pruned.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], u)
+      assert(pruned.schema == e.current().filter(w).schema, u)
+      assert(rows(pruned) == rows(e.current().filter(w)), u)
+    }
+    val columns = e.current($"user_id" === user).columns.toSeq
+    assert(columns.dropRight(2) == Tables(spark, dir).events.columns.toSeq)
+    assert(columns.takeRight(2).toSet == Set("message", "read"))
+  }
+
+  test("a journal-only key reads back after compact(), a checkpoint and WAL recovery, then from the base with a job") {
+    import spark.implicits._
+    val wal = Scratch.tempDir("stats_swap") + "/ops.wal"
+    val store = new StateStore(spark, dir, walPath = Some(wal))
+    def feed(s: StateStore, u: Long): DataFrame =
+      s.payments.current($"o_custkey" === u).select($"o_orderkey", $"o_custkey", $"o_totalprice")
+    def readBack(s: StateStore, u: Long, fromBase: Boolean): Unit = {
+      val (got, jobs) = JobCount(spark)(RestServe.jsonRows(feed(s, u)).toSeq)
+      assert(got == Seq(s"""{"o_orderkey":$u,"o_custkey":$u,"o_totalprice":1.0}"""), s"feed $u")
+      assert((jobs > 0) == fromBase, s"feed $u started $jobs jobs")
+      val (row, lookupJobs) = JobCount(spark)(s.payments.lookup(Seq(u)))
+      assert(row.exists(_("o_custkey") == u), s"lookup $u")
+      assert((lookupJobs > 0) == fromBase, s"lookup $u started $lookupJobs jobs")
+    }
+    def pay(s: StateStore, u: Long): Unit =
+      s.payments.upsert(Map("o_orderkey" -> u, "o_custkey" -> u, "o_totalprice" -> 1.0))
+    val Seq(a, b, c) = Seq(4000001L, 4000002L, 4000003L)
+    pay(store, a)
+    readBack(store, a, fromBase = false)
+    store.payments.compact()
+    readBack(store, a, fromBase = true)
+    pay(store, b)
+    readBack(store, b, fromBase = false)
+    store.checkpoint()
+    readBack(store, b, fromBase = true)
+    pay(store, c)
+    readBack(store, c, fromBase = false)
+    val revived = new StateStore(spark, dir, walPath = Some(wal))
+    Seq(a, b).foreach(readBack(revived, _, fromBase = true))
+    readBack(revived, c, fromBase = false)
   }
 }
